@@ -93,16 +93,20 @@ def _kmeans_local(
     (round 14; the PQ ``_codebooks_local`` precedent): identical init
     (``vec_id < k``), identical round-6 cosine argmax with the
     smallest-cid tie-break, identical rounded coordinate-mean update.
-    IEEE parity by construction: dot products and |e|² accumulate per
-    COORDINATE with elementwise numpy adds in index order — the exact
-    ``aggregate(zip_with(...), 0.0, acc + v)`` fold — centroid norms
-    use the same Python left-to-right sum the literal LUT uses, and
-    rounding is monotone, so the rounded argmax winner always lies
-    within ``unrounded_max − 2e-6`` (only that tie window pays the
-    exact-but-slow ``_round6_py``). Mean sums run through
-    ``np.add.accumulate`` (sequential by definition) in vec_id order —
-    the distributed update sums in partition order; both land on the
-    same round-6 coordinate (the pq/oracle-gate argument). A zero
+    The assignment step follows the engine's arithmetic: dot products
+    and |e|² accumulate per COORDINATE with elementwise numpy adds in
+    index order — the ``aggregate(zip_with(...), 0.0, acc + v)`` fold
+    — centroid norms use the same Python left-to-right sum the literal
+    LUT uses, and rounding is monotone, so the rounded argmax winner
+    always lies within ``unrounded_max − 2e-6`` (only that tie window
+    pays the exact-but-slow ``_round6_py``). The update step does NOT
+    share the engine's order: mean sums run through
+    ``np.add.accumulate`` in vec_id order, the distributed update sums
+    in partition order. The two sums can differ in the last ULPs, and
+    parity rests on round-6 absorbing that difference — it holds unless
+    a coordinate mean lands within a few ULPs of a round-6 half-way
+    point, which the parity tests and the oracle gate check on the
+    testdata (the pq argument), not by construction. A zero
     vector yields NaN cosines exactly like the engine (NaN sorts
     greatest, ties → smallest cid)."""
     import math
@@ -179,7 +183,8 @@ def kmeans_codebook(
     ANN store's drift-triggered reindex passes order-based seeds.
     ``train`` (from ``similarity.collect_train_vectors``) fits the
     codebook driver-locally without the per-round Spark jobs — see
-    ``_kmeans_local`` for the bit-parity argument."""
+    ``_kmeans_local`` for why it matches the distributed fit (round-6
+    absorption of summation order, checked, not by construction)."""
     if train is not None:
         return _kmeans_local(train, k, rounds, dim, init=init)
     cents = init if init is not None else init_centroids(embeddings, k)

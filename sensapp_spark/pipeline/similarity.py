@@ -566,16 +566,23 @@ def sql_array_lit(values, depth: int = 1) -> F.Column:
 
     Doubles serialize via ``repr`` (shortest round-trip — Spark's
     ``Double.parseDouble`` restores the identical bits) with the ``D``
-    suffix so the parser yields DOUBLE, not DECIMAL; ints pass through
-    as plain literals. ``depth`` is the nesting level of ``values``
-    (1 = flat list)."""
+    suffix so the parser yields DOUBLE, not DECIMAL; NaN and ±inf, which
+    have no numeric literal, render as ``CAST('NaN' AS DOUBLE)`` etc.;
+    ints pass through as plain literals. ``depth`` is the nesting level
+    of ``values`` (1 = flat list)."""
+    import math
 
     def fmt(v) -> str:
         if isinstance(v, bool):  # pragma: no cover — not used today
             raise TypeError("bool literals unsupported")
         if isinstance(v, int):
             return str(v)
-        return repr(float(v)) + "D"
+        v = float(v)
+        if math.isnan(v):
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(v):
+            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+        return repr(v) + "D"
 
     def render(vals, d: int) -> str:
         if d == 0:

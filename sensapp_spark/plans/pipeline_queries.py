@@ -38,6 +38,7 @@ from sensapp_spark.pipeline.similarity import (
     hyperplanes,
     query_bucket,
 )
+from sensapp_spark.plans.testdata import session_memo
 
 PIPELINE_QUERIES: dict = {}
 PIPELINE_ORACLES: dict[str, str] = {}
@@ -53,25 +54,12 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# Lazy-PLAN memo (round 14 — the load_events precedent): every
-# ``spark.read.parquet`` pays a driver-side reader init (file listing +
-# footer schema read) per call, and the pipeline entries call these
-# loaders once each. Only the unexecuted DataFrame (the plan) is
-# memoized — no rows, no materialized state — so every bench/oracle
-# invocation still computes from the parquet inputs.
-_PLAN_MEMO: dict[tuple[int, str, str], DataFrame] = {}
-
-
 def _read_memo(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    from sensapp_spark.plans.testdata import ensure_session_confs
-
-    key = (id(spark), sf_dir, table)
-    cached = _PLAN_MEMO.get(key)
-    if cached is None:
-        ensure_session_confs(spark)
-        cached = spark.read.parquet(f"{sf_dir}/{table}.parquet")
-        _PLAN_MEMO[key] = cached
-    return cached
+    return session_memo(
+        spark,
+        ("parquet", table, sf_dir),
+        lambda: spark.read.parquet(f"{sf_dir}/{table}.parquet"),
+    )
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1458,15 +1446,8 @@ def ann_ivf_topk(spark, sf_dir):
     # training (IVF centroids, PQ codebooks, SQ stats) driver-locally
     # below the size gate — previously ivf/pq/sq each ran their own
     # 1-2 training collect jobs over the same corpus. None above the
-    # gate (or with SENSAPP_ANN_DRIVER_TRAIN=0, the A/B lever) keeps
-    # the distributed trainings unchanged.
-    import os as _os
-
-    train = (
-        collect_train_vectors(emb)
-        if _os.environ.get("SENSAPP_ANN_DRIVER_TRAIN", "1") != "0"
-        else None
-    )
+    # gate keeps the distributed trainings unchanged.
+    train = collect_train_vectors(emb)
     ivf = ivf_topk(
         emb, QUERY_VEC, ANN_K,
         codebook=(
@@ -1627,20 +1608,14 @@ def dedup_embedding_pairs(spark, sf_dir):
       pairwise cosine, one min-id keeper per dropped vector. The
       cluster id bounds the quadratic step; ``k`` is the 100 TB lever.
     """
-    import os as _os
-
     from sensapp_spark.pipeline.clustering import semdedup_pairs
     from sensapp_spark.pipeline.similarity import collect_train_vectors
 
     emb = _emb(spark, sf_dir)
     # Driver-local k-means fit below the size gate (round 14 — the
-    # ann_ivf_topk pattern extended to the semdedup codebook; bit-
-    # parity pinned by tests/test_clustering_text.py).
-    train = (
-        collect_train_vectors(emb)
-        if _os.environ.get("SENSAPP_ANN_DRIVER_TRAIN", "1") != "0"
-        else None
-    )
+    # ann_ivf_topk pattern extended to the semdedup codebook; parity
+    # with the distributed fit pinned by tests/test_clustering_text.py).
+    train = collect_train_vectors(emb)
     lsh = embedding_neardup_pairs(emb, threshold=0.3).select(
         F.lit("lsh").alias("scope"), "vec_a", "vec_b", "cosine"
     )
@@ -1667,17 +1642,11 @@ def embedding_kmeans(spark, sf_dir):
     assignment over the embedding corpus. Assignment is a shuffle-free
     codegen projection; only the k×dim codebook ever reaches the
     driver. The oracle replays both rounds with windowed argmax CTEs."""
-    import os as _os
-
     from sensapp_spark.pipeline.clustering import kmeans_assign
     from sensapp_spark.pipeline.similarity import collect_train_vectors
 
     emb = _emb(spark, sf_dir)
-    train = (
-        collect_train_vectors(emb)
-        if _os.environ.get("SENSAPP_ANN_DRIVER_TRAIN", "1") != "0"
-        else None
-    )
+    train = collect_train_vectors(emb)
     return kmeans_assign(emb, train=train)
 
 

@@ -119,11 +119,14 @@ def _await_all(futures) -> None:
     (or ``pool.map``) surfaces only the FIRST exception and silently
     discards any concurrent one, which can mask the more informative of
     two overlapping maintenance failures (round-13 ADVICE). Secondary
-    errors ride the raised exception as ``__context__``-style notes."""
+    errors ride the raised exception as ``__context__``-style notes.
+    The primary error is the first failure in ``futures`` order, so the
+    same failures always raise the same exception."""
     import concurrent.futures as _cf
 
-    done, _ = _cf.wait(list(futures))
-    errs = [f.exception() for f in done]
+    futures = list(futures)
+    _cf.wait(futures)
+    errs = [f.exception() for f in futures]
     errs = [e for e in errs if e is not None]
     if errs:
         primary = errs[0]
@@ -134,21 +137,16 @@ def _await_all(futures) -> None:
         raise primary
 
 
-def _operand_cache() -> dict | None:
-    """One PromQL operand memo per ENTRY CONSTRUCTION (round 14, guide
-    §2.4/§3.3): the tagged-union entries evaluate several expressions
-    whose operands repeat (rate(click[31d]) appears in all 7
-    binary_ratio cases); a shared dict lets the evaluator build each
-    canonically-equal per-series vector once and localCheckpoint it, so
-    union branches stop re-executing the sample scan + reduction (AQE's
-    stage cache does not reuse canonically-equal exchanges across union
-    branches — measured round 13). The dict never outlives one entry
-    call, so every bench/oracle invocation still computes from parquet.
-    SENSAPP_PROMQL_SHARE=0 disables sharing (same-session A/B lever;
-    results are identical either way)."""
-    return (
-        {} if os.environ.get("SENSAPP_PROMQL_SHARE", "1") != "0" else None
-    )
+# PromQL operand memo (round 14): the tagged-union
+# entries evaluate several expressions whose operands repeat
+# (rate(click[31d]) appears in all 7 binary_ratio cases), so each
+# builds one ``cache: dict = {}`` and passes it to every evaluate_*
+# call. The evaluator builds each canonically-equal per-series vector
+# once and localCheckpoints it, so union branches stop re-executing the
+# sample scan + reduction (AQE's stage cache does not reuse
+# canonically-equal exchanges across union branches — measured round
+# 13). The dict never outlives one entry call, so every bench/oracle
+# invocation still computes from parquet.
 
 
 @register(
@@ -1089,7 +1087,7 @@ def promql_ext_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket",
         ),
     ]
-    cache = _operand_cache()
+    cache: dict = {}
     parts = []
     for tag, expr, key_col in cases:
         out = evaluate_extended(
@@ -1198,7 +1196,7 @@ def promql_ext_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             None,
         ),
     ]
-    cache = _operand_cache()
+    cache: dict = {}
     parts = []
     for tag, expr, key_col in cases:
         out = evaluate_extended(
@@ -1533,7 +1531,7 @@ def promql_ext_binary_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     from sensapp_spark.query.promql_ext import _labels_without
 
-    cache = _operand_cache()
+    cache: dict = {}
     parts = []
     for tag, expr in cases:
         out = evaluate_binary(
@@ -1704,13 +1702,11 @@ def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = joined.groupBy("name", bucket.alias("bucket")).agg(
         F.count("*").alias("n")
     )
-    cache = _operand_cache()
-    if cache is not None:
-        # The hist and quantile arms both consume this metrics×buckets
-        # frame; a lazy localCheckpoint makes the sample scan + groupBy
-        # run once instead of once per union branch (guide §2.4 — AQE
-        # does not reuse canonically-equal exchanges across branches).
-        hist = hist.localCheckpoint(eager=False)
+    # The hist and quantile arms both consume this metrics×buckets
+    # frame; a lazy localCheckpoint makes the sample scan + groupBy
+    # run once instead of once per union branch (AQE does not reuse
+    # canonically-equal exchanges across branches).
+    hist = hist.localCheckpoint(eager=False)
     wcum = Window.partitionBy("name").orderBy("bucket")
     cum = hist.withColumn("c", F.sum("n").over(wcum)).withColumn(
         "total", F.sum("n").over(Window.partitionBy("name"))
@@ -1759,6 +1755,7 @@ def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         sensors, vals, [(None, dt.datetime(2024, 1, 31, 23, 30))]
     )
     now = dt.datetime(2024, 2, 1)
+    cache: dict = {}
     prom = [
         evaluate_extended(
             bsensors, bvals,
@@ -2809,7 +2806,7 @@ def promql_ext_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
             'last_over_time(click{region="r2"}[31d])',
         ),
     ]
-    cache = _operand_cache()
+    cache: dict = {}
     parts = [
         (
             tag,
@@ -2848,7 +2845,7 @@ def promql_ext_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``avg_over_time(purchase[31d]) > bool 50`` (keep all series, 0/1
     value) and ``… > 50`` (Prometheus default: filter, values
     unchanged)."""
-    cache = _operand_cache()
+    cache: dict = {}
     gt_bool = _ext_bin(
         spark, sf_dir, "avg_over_time(purchase[31d]) > bool 50", cache=cache
     ).select("sensor_id", "value")

@@ -20,6 +20,9 @@ aggregation never happens at query time.
 
 from __future__ import annotations
 
+import weakref
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,13 +31,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return load_events(spark, sf_dir)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-# The derived sensors dimension is a distinct-aggregate over the fact
-# table; within one session it is immutable per sf_dir, so cache the
-# (tiny) result instead of re-shuffling it for every query. In
-# production the dimension is a real table and this memo disappears.
-_SENSORS_CACHE: dict[tuple[int, str], DataFrame] = {}
 
 
 def ensure_session_confs(spark: SparkSession) -> None:
@@ -46,14 +42,31 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
-# Lazy-PLAN memo for the events fact table (round 14, guide §5 — the
-# driver should do almost no data work): ``spark.read.parquet`` pays a
-# driver-side reader init (file listing + footer schema read) on every
-# call, and the tagged-union entries call the loaders once per case.
-# Only the unexecuted DataFrame (the plan) is memoized — no rows, no
-# materialized state — so every bench/oracle invocation still computes
-# from the parquet inputs.
-_EVENTS_PLAN: dict[tuple[int, str], DataFrame] = {}
+# Per-session memo for the registry's input frames (round 14 — the
+# driver should do almost no data work): ``spark.read.parquet``
+# pays a driver-side reader init (file listing + footer schema read) on
+# every call, and the tagged-union entries call the loaders once per
+# case. Reader frames are memoized as unexecuted plans, so every
+# bench/oracle invocation still computes from the parquet inputs; the
+# derived sensors dimension is memoized cached (it is tiny and
+# immutable per sf_dir). Entries hang off the session object itself,
+# held weakly, never off ``id(spark)``: an id can come back for a later
+# session, an object cannot.
+_SESSION_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def session_memo(
+    spark: SparkSession, key: tuple, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """Return ``build()`` memoized per (session, ``key``). The session
+    confs are re-applied on every lookup, hit or miss: a caller may have
+    changed them since the frame was memoized."""
+    ensure_session_confs(spark)
+    memo = _SESSION_MEMO.setdefault(spark, {})
+    cached = memo.get(key)
+    if cached is None:
+        cached = memo[key] = build()
+    return cached
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -64,11 +77,12 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     testdata stores µs TIMESTAMP directly. Handle both: if ``ts`` arrives
     as a long, it is ns — integer-DIV to µs (a double division would round
     at ~256 ns granularity for 2024 epochs, 53-bit mantissa < 1.7e18)."""
-    key = (id(spark), sf_dir)
-    cached = _EVENTS_PLAN.get(key)
-    if cached is not None:
-        return cached
-    ensure_session_confs(spark)
+    return session_memo(
+        spark, ("events", sf_dir), lambda: _read_events(spark, sf_dir)
+    )
+
+
+def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     if dict(ev.dtypes)["ts"] == "bigint":
         ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
@@ -78,17 +92,18 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # so the wall clock is preserved) for the epoch-arithmetic
         # operators downstream.
         ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-    _EVENTS_PLAN[key] = ev
     return ev
 
 
 def events_sensors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sensors dimension derived from events: one series per
     (event_type, user_id)."""
-    key = (id(spark), sf_dir)
-    cached = _SENSORS_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return session_memo(
+        spark, ("sensors", sf_dir), lambda: _derive_sensors(spark, sf_dir)
+    )
+
+
+def _derive_sensors(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     base = ev.select("event_type", "user_id").distinct()
     user = F.col("user_id").cast("string")
@@ -103,7 +118,7 @@ def events_sensors(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         lambda k, v: v.isNotNull(),
     )
-    out = base.select(
+    return base.select(
         F.concat(F.col("event_type"), F.lit("/"), user).alias("sensor_id"),
         F.col("event_type").alias("name"),
         F.lit("Float").alias("type"),
@@ -111,8 +126,6 @@ def events_sensors(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("string").alias("unit_description"),
         labels.alias("labels"),
     ).cache()
-    _SENSORS_CACHE[key] = out
-    return out
 
 
 def events_values(spark: SparkSession, sf_dir: str) -> DataFrame:

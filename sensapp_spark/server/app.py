@@ -50,13 +50,7 @@ import os
 from flask import Flask, Response, jsonify, request
 
 from sensapp_spark.datamodel.types import SensorType
-from sensapp_spark.exporters import (
-    iter_senml,
-    to_arrow_multi,
-    to_csv_multi,
-    to_jsonl,
-    to_senml,
-)
+from sensapp_spark.exporters import iter_senml
 from sensapp_spark.exporters.prometheus_read import handle_read_request
 from sensapp_spark.ingest.arrow_importer import ingest_arrow
 from sensapp_spark.ingest.csv_importer import CsvFormatError, ingest_csv
@@ -114,7 +108,7 @@ INSTANT_ROW_CAP = 100_000
 def create_app(
     spark,
     lake: SensorLake,
-    stream_threshold: int | None = DEFAULT_STREAM_THRESHOLD,
+    stream_threshold: int = DEFAULT_STREAM_THRESHOLD,
 ) -> Flask:
     """``stream_threshold``: export row count above which responses are
     served as chunked streams with bounded driver memory instead of one
@@ -125,7 +119,7 @@ def create_app(
     Text formats decide by PEEK-AHEAD on one iterator (the query
     executes once, no probe job); Arrow keeps an O(threshold)
     CollectLimit probe because its golden small path is a single
-    toArrow() batch. ``None`` disables streaming (always collect)."""
+    toArrow() batch."""
     app = Flask("sensapp_spark")
 
     def _stream_senml(records) -> Response:
@@ -178,16 +172,8 @@ def create_app(
                 iter_parquet_from_rows,
                 multi_rows,
                 parquet_multi_bytes_from_rows,
-                to_parquet_multi,
             )
 
-            if stream_threshold is None:
-                body = (
-                    to_arrow_multi(cols, stype)
-                    if fmt == "arrow"
-                    else to_parquet_multi(cols, stype)
-                )
-                return Response(body, mimetype=EXPORT_MEDIA[fmt])
             rows = multi_rows(cols, stype)
             head = list(islice(rows, stream_threshold + 1))
             if len(head) <= stream_threshold:
@@ -209,14 +195,6 @@ def create_app(
                 else iter_parquet_from_rows(columnar_rest())
             )
             return Response(frames, mimetype=EXPORT_MEDIA[fmt])
-        if stream_threshold is None:
-            if fmt == "csv":
-                body = to_csv_multi(cols, stype)
-            elif fmt == "jsonl":
-                body = to_jsonl(cols, stype)
-            else:
-                return jsonify(to_senml(cols, stype))
-            return Response(body, mimetype=EXPORT_MEDIA[fmt])
         # Peek-ahead (single execution, no probe job): pull up to
         # threshold+1 rows from the JVM-formatted iterator; a result
         # that fits assembles the exact collect-path body from the
@@ -974,9 +952,6 @@ def create_app(
             )
         )
         it = row_lines(lines)
-        if stream_threshold is None:
-            body = "".join(ln + "\n" for ln in it)
-            return Response(body, mimetype="application/jsonl")
         head = list(islice(it, stream_threshold + 1))
         if len(head) <= stream_threshold:
             it.close()

@@ -127,3 +127,19 @@ def test_round6_py_matches_spark(spark):
         r.r for r in df.select(F.round("x", 6).alias("r")).collect()
     ]
     assert got == [_round6_py(v) for v in vals]
+
+
+def test_sql_array_lit_renders_non_finite_doubles(spark):
+    """NaN and ±inf have no numeric SQL literal; ``sql_array_lit`` must
+    render them as string casts, or ``F.expr`` fails to parse the array
+    (a NaN centroid coordinate or SQ scale would break the plan)."""
+    import math
+
+    from sensapp_spark.pipeline.similarity import sql_array_lit
+
+    vals = [math.nan, math.inf, -math.inf, 1.5]
+    col = sql_array_lit(vals).alias("a")
+    df = spark.range(1).select(col)
+    assert dict(df.dtypes)["a"] == "array<double>"
+    got = df.first().a
+    assert math.isnan(got[0]) and got[1:] == vals[1:]

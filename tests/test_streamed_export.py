@@ -7,8 +7,8 @@ driver-side up to its 10M-row limit, src/storage/mod.rs:15-17).
 
 The big-path tests monkeypatch the collect-path exporters to raise, so a
 regression back to full collect fails loudly; body equivalence against
-the collect path (captured before patching) proves the streamed bytes
-are the same export.
+those exporters run directly on the route's query frame (captured before
+patching) proves the streamed bytes are the same export.
 """
 
 from __future__ import annotations
@@ -19,12 +19,19 @@ import json
 import pyarrow.ipc as ipc
 import pytest
 
-import sensapp_spark.server.app as appmod
+from sensapp_spark.datamodel.types import SensorType
+from sensapp_spark.exporters import arrow_exporter as arrowmod
+from sensapp_spark.exporters import csv_exporter as csvmod
+from sensapp_spark.exporters import jsonl_exporter as jsonlmod
+from sensapp_spark.exporters import senml_exporter as senmlmod
+from sensapp_spark.operators.selection import query_samples
+from sensapp_spark.query.promql import parse_promql_query
 from sensapp_spark.server.app import create_app
 from sensapp_spark.storage.lake import SensorLake
 
 N_ROWS = 24
-QUERY = "/api/v1/query?query=streamtemp[100000h]&format="
+PROMQL = "streamtemp[100000h]"
+QUERY = f"/api/v1/query?query={PROMQL}&format="
 
 
 def _fixture_csv() -> str:
@@ -36,22 +43,38 @@ def _fixture_csv() -> str:
     return "\n".join(lines) + "\n"
 
 
+def _route_frame(lake: SensorLake):
+    """The frame ``GET /api/v1/query`` exports for ``PROMQL``."""
+    parsed = parse_promql_query(PROMQL)
+    df = query_samples(
+        lake.sensors(),
+        lake.values(SensorType.FLOAT, parsed.start_time, parsed.end_time),
+        parsed.matchers,
+        start=parsed.start_time.replace(tzinfo=None),
+        end=parsed.end_time.replace(tzinfo=None),
+    )
+    return df.select("sensor_id", "time", "value", "name", "unit", "labels")
+
+
 @pytest.fixture(scope="module")
 def env(spark, tmp_path_factory):
     lake = SensorLake(spark, str(tmp_path_factory.mktemp("lake_stream")))
     streaming = create_app(spark, lake, stream_threshold=5)
-    collecting = create_app(spark, lake, stream_threshold=None)
-    streaming.testing = collecting.testing = True
-    with collecting.test_client() as c:
+    streaming.testing = True
+    with streaming.test_client() as c:
         assert c.post(
             "/publish", data=_fixture_csv(), content_type="text/csv"
         ).status_code == 200
-        # Reference bodies from the collect path, captured BEFORE the
-        # big-path tests patch the collect exporters away.
-        expected = {
-            fmt: c.get(QUERY + fmt).get_data()
-            for fmt in ("csv", "jsonl", "arrow", "senml", "parquet")
-        }
+    # Reference bodies from the collect-path exporters, captured BEFORE
+    # the big-path tests patch them away.
+    cols, st = _route_frame(lake), SensorType.FLOAT
+    expected = {
+        "csv": csvmod.to_csv_multi(cols, st).encode(),
+        "jsonl": jsonlmod.to_jsonl(cols, st).encode(),
+        "arrow": arrowmod.to_arrow_multi(cols, st),
+        "parquet": arrowmod.to_parquet_multi(cols, st),
+        "senml": senmlmod.to_senml(cols, st),
+    }
     return streaming, expected
 
 
@@ -60,13 +83,14 @@ def no_full_collect(monkeypatch):
     def boom(*a, **k):  # pragma: no cover - the regression case
         raise AssertionError("full-collect exporter called on the big path")
 
-    for name in ("to_csv_multi", "to_jsonl", "to_arrow_multi", "to_senml"):
-        monkeypatch.setattr(appmod, name, boom)
-    # The gateway imports the parquet exporter lazily per request, so the
-    # patch lands on its home module.
-    import sensapp_spark.exporters.arrow_exporter as arrowmod
-
-    monkeypatch.setattr(arrowmod, "to_parquet_multi", boom)
+    for mod, name in (
+        (csvmod, "to_csv_multi"),
+        (jsonlmod, "to_jsonl"),
+        (arrowmod, "to_arrow_multi"),
+        (arrowmod, "to_parquet_multi"),
+        (senmlmod, "to_senml"),
+    ):
+        monkeypatch.setattr(mod, name, boom)
 
 
 @pytest.mark.parametrize("fmt", ["csv", "jsonl"])
@@ -117,7 +141,7 @@ def test_streamed_senml_parses_equal(env, no_full_collect):
         r = c.get(QUERY + "senml")
     assert r.status_code == 200
     got = json.loads(r.get_data(as_text=True))
-    want = json.loads(expected["senml"].decode())
+    want = json.loads(json.dumps(expected["senml"]))
     assert got == want
     assert got[0]["bver"] == 10 and len(got) == N_ROWS
 
