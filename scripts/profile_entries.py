@@ -4,8 +4,9 @@ For each registry entry (filtered by substring args) it times DataFrame
 CONSTRUCTION (driver-side eager work: temp-lake builds, refresh ticks,
 training collects) separately from the noop-sink EXECUTION,
 and counts the Spark jobs, stages and tasks each phase ran, from the
-status tracker. The counts repeat exactly from run to run, so
-structural claims (fewer redundant executions) hold even when walls
+status tracker, and the driver→JVM py4j calls each phase sent. The
+counts repeat exactly from run to run, so structural claims (fewer
+redundant executions, cheaper plan construction) hold even when walls
 wobble.
 
   python scripts/profile_entries.py [--sf DIR] [--repeats 2] [name ...]
@@ -64,15 +65,44 @@ def _stages_tasks(spark, jids: list[int]) -> tuple[int, int]:
     return stages, tasks
 
 
+@contextlib.contextmanager
+def py4j_calls():
+    """Count the py4j commands the driver sends to the JVM inside the
+    block; yields a one-element list holding the running count.
+    Object-release commands are left out: the garbage collector sends
+    them whenever it happens to run, so counting them would make the
+    count differ between runs of the same code."""
+    from py4j import clientserver, protocol
+
+    release = (
+        protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    )
+    send = clientserver.ClientServerConnection.send_command
+    calls = [0]
+
+    def counted(self, command):
+        if not command.startswith(release):
+            calls[0] += 1
+        return send(self, command)
+
+    clientserver.ClientServerConnection.send_command = counted
+    try:
+        yield calls
+    finally:
+        clientserver.ClientServerConnection.send_command = send
+
+
 def profile_entry(spark, fn, sf_dir: str) -> dict:
     """Build ``fn(spark, sf_dir)``, then run it into the noop sink; wall
-    seconds and job/stage/task counts for each phase."""
+    seconds, job/stage/task counts and py4j calls for each phase."""
     before = max(_new_jobs(spark, -1), default=-1)
     t0 = time.perf_counter()
-    df = fn(spark, sf_dir)
+    with py4j_calls() as build_py4j:
+        df = fn(spark, sf_dir)
     t1 = time.perf_counter()
     built = _new_jobs(spark, before)
-    df.write.format("noop").mode("overwrite").save()
+    with py4j_calls() as exec_py4j:
+        df.write.format("noop").mode("overwrite").save()
     t2 = time.perf_counter()
     ran = _new_jobs(spark, max(built, default=before))
     b_stages, b_tasks = _stages_tasks(spark, built)
@@ -87,6 +117,8 @@ def profile_entry(spark, fn, sf_dir: str) -> dict:
         "exec_jobs": len(ran),
         "exec_stages": e_stages,
         "exec_tasks": e_tasks,
+        "build_py4j": build_py4j[0],
+        "exec_py4j": exec_py4j[0],
     }
 
 

@@ -54,7 +54,7 @@ def select_sensors(
     return out
 
 
-def _utc_lit(value: dt.datetime) -> F.Column:
+def utc_lit(value: dt.datetime) -> F.Column:
     """Timestamp literal pinned to UTC. PySpark converts a NAIVE datetime
     through the driver *process* timezone — on a TZ≠UTC host that silently
     shifts every bound. All engine timestamps are UTC (reference
@@ -73,9 +73,9 @@ def time_range(
     """Operator Q5: inclusive-both-ends time filter, both bounds optional
     (reference src/storage/sqlite/storage.rs:679-693)."""
     if start is not None:
-        df = df.filter(F.col(time_col) >= _utc_lit(start))
+        df = df.filter(F.col(time_col) >= utc_lit(start))
     if end is not None:
-        df = df.filter(F.col(time_col) <= _utc_lit(end))
+        df = df.filter(F.col(time_col) <= utc_lit(end))
     return df
 
 

@@ -824,10 +824,10 @@ def downsample_rate_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ORDERED per-bucket state — within-bucket reset counters plus the
     # cross-bucket boundary fold, and the last-two-samples struct —
     # through the ENGINE's own value expressions (rollup_serve.
-    # _func_value), pinned against DuckDB recomputing resets (lag over
+    # _VALUE_SQL), pinned against DuckDB recomputing resets (lag over
     # (time, value) order) and irate (top-2 by (time, value) desc,
     # counter-reset rule) from the same closed windows over raw rows.
-    from sensapp_spark.query.rollup_serve import _func_value
+    from sensapp_spark.query.rollup_serve import _VALUE_SQL
 
     # ONE ordered-stat frame shared by both ordered arms (see the
     # sharing note above): identical subtrees dedup to a single
@@ -841,9 +841,9 @@ def downsample_rate_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _served_arm(kind, func):
         # Fold from the shared ordered frame: same values as a
-        # per-function pruned pass — _func_value reads only its own
-        # stat columns.
-        value, keep = _func_value(func)
+        # per-function pruned pass — each value expression reads only
+        # its own stat columns.
+        value, keep = _VALUE_SQL[func]
         win_f = win_ord if keep is None else win_ord.filter(keep)
         return win_f.select(
             F.lit(kind).alias("kind"),
@@ -853,7 +853,7 @@ def downsample_rate_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("double").alias("avg_value"),
             F.lit(None).cast("double").alias("min_value"),
             F.lit(None).cast("double").alias("max_value"),
-            F.round(value, 6).alias("rate"),
+            F.round(F.expr(value), 6).alias("rate"),
         )
 
     served_resets = _served_arm("served_resets", "resets")

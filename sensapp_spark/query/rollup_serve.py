@@ -32,13 +32,23 @@ union the boundary-edge rows, then ONE groupBy (sensor, step) with
 map-side partials. The tail (label joins, aggregations, post-ops)
 reuses promql_ext._finish_range verbatim, so everything above the
 per-series window reduction behaves identically by construction.
+
+The plan is built from SQL text: each branch is one ``filter`` plus one
+``selectExpr`` string, the merge one expression per needed stat, the
+value one more string. Only the stats a function reads are rendered,
+and only integers this module computes (µs bounds, step count, grain)
+are interpolated. Why: a served request's wall is dominated by
+driver-side plan construction, not data, and one py4j ``Column`` per
+expression node — each with PySpark's call-site capture — took 2,189
+JVM calls to build one ``rate()`` range frame where the text form
+takes 175. The optimized plan is the same either way.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sensapp_spark.datamodel.types import SensorType
@@ -177,20 +187,71 @@ def rollup_serveable(
     )
 
 
-# Logical window-stat columns → (full-bucket expr, edge expr, merge).
-# Built lazily inside range_windows (Column construction needs an
-# active session); the edge first/last structs carry the BOUNDARY
-# instant with emin/emax — edge samples all share that instant, so
-# under struct(time, value) ordering those ARE their first/last.
-# ``seq`` and ``last2`` are ORDERED stats (round 13): their merge is a
-# sorted collect_list of per-bucket structs — bounded by W/grain
-# entries per window, never by samples — because resets/changes need
-# bucket ADJACENCY (a commutative scalar merge cannot see it) and
-# irate/idelta need the top-2 samples across buckets.
+# Logical window-stat columns → SQL text of the full-bucket branch,
+# the edge branch and the merge (module docstring, "Plan shape"). The
+# edge first/last structs carry the BOUNDARY instant with emin/emax —
+# edge samples all share that instant, so under struct(time, value)
+# ordering those ARE their first/last. ``seq`` and ``last2`` are
+# ORDERED stats (round 13): their merge is a sorted collect_list of
+# per-bucket structs — bounded by W/grain entries per window, never by
+# samples — because resets/changes need bucket ADJACENCY (a
+# commutative scalar merge cannot see it) and irate/idelta need the
+# top-2 samples across buckets.
 _STAT_COLS = (
     "cnt", "vsum", "vmin", "vmax", "first", "last", "vsum2",
     "nrows", "seq", "last2",
 )
+_FIRST = "named_struct('t', tfirst, 'v', vfirst)"
+_LAST = "named_struct('t', tlast, 'v', vlast)"
+_FULL_SQL = {
+    "cnt": "cnt",
+    "vsum": "vsum",
+    "vmin": "vmin",
+    "vmax": "vmax",
+    "first": _FIRST,
+    "last": _LAST,
+    "vsum2": "vsum2",
+    # Pre-v3 rows read nrows as null → the raw row count falls back
+    # to the non-null sample count (the pre-round-13 guard), so the
+    # serve fold needs no schema flag in-plan.
+    "nrows": "coalesce(nrows, cnt)",
+    "seq": f"named_struct('first', {_FIRST}, 'last', {_LAST}, "
+           "'nr', coalesce(nresets, 0), 'nc', coalesce(nchanges, 0))",
+    "last2": f"named_struct('last', {_LAST}, 'prev', CASE WHEN tprev "
+             "IS NOT NULL THEN named_struct('t', tprev, 'v', vprev) END)",
+}
+# Edge samples all share the boundary instant: under the raw
+# evaluator's (time, value) ordering they are value-sorted, so resets
+# within the group are 0 (ascending), changes are (#distinct values −
+# 1), and the second-to-last sample is the second-largest value
+# (evprev).
+_EFIRST = "named_struct('t', bucket, 'v', emin)"
+_ELAST = "named_struct('t', bucket, 'v', emax)"
+_EDGE_SQL = {
+    "cnt": "ecnt",
+    "vsum": "esum",
+    "vmin": "emin",
+    "vmax": "emax",
+    "first": _EFIRST,
+    "last": _ELAST,
+    "vsum2": "esum2",
+    "nrows": "coalesce(enrows, ecnt)",
+    "seq": f"named_struct('first', {_EFIRST}, 'last', {_ELAST}, "
+           "'nr', CAST(0 AS BIGINT), "
+           "'nc', greatest(CAST(0 AS BIGINT), coalesce(endv, 1) - 1))",
+    "last2": f"named_struct('last', {_ELAST}, 'prev', CASE WHEN ecnt "
+             ">= 2 THEN named_struct('t', bucket, 'v', evprev) END)",
+}
+# Ordered merges: temporally sorted (buckets are time-disjoint and the
+# outer struct sorts on its first field — `first` resp. `last`),
+# W/grain-bounded per window.
+_MERGE_SQL = {
+    "cnt": "sum({})", "vsum": "sum({})", "vmin": "min({})",
+    "vmax": "max({})", "first": "min({})", "last": "max({})",
+    "vsum2": "sum({})", "nrows": "sum({})",
+    "seq": "sort_array(collect_list({}))",
+    "last2": "reverse(sort_array(collect_list({})))",
+}
 
 
 def _needed_stats(func: str | None) -> frozenset:
@@ -236,11 +297,13 @@ def range_windows(
     """Per-(sensor, step) closed-window stats from rollup buckets:
     for each step t_i = start + i·step in [start, end], aggregate the
     samples in [t_i − offset − W, t_i − offset] as ``(sensor_id, __i,
-    <stats>)`` where <stats> is ``need`` (a subset of
-    ``cnt/vsum/vmin/vmax/first/last/vsum2``; None = all — ``cnt`` is
-    always included for the empty-window guard). Alignment (W, step,
-    start−offset all multiples of the grain) is the CALLER's contract
-    (checked by :func:`rollup_serveable`); this function asserts it.
+    <stats>)`` where <stats> is ``need`` (a subset of ``_STAT_COLS``)
+    plus ``nrows``, always added as the empty-window guard. None means
+    every scalar stat — all but the ordered ``seq``/``last2``, whose
+    collect_list merges are built only when a fold asks for them.
+    Alignment (W, step, start−offset all multiples of the grain) is
+    the CALLER's contract (checked by :func:`rollup_serveable`); this
+    function asserts it.
 
     ``realtime`` reads rollup ∪ recomputed live tail — exact even
     against rows the maintainer has not refreshed yet. ``sensor_ids``
@@ -273,67 +336,26 @@ def range_windows(
         buckets = buckets.join(
             F.broadcast(sensor_ids), "sensor_id", "leftsemi"
         )
+    if need is None:
+        need = frozenset(_STAT_COLS) - {"seq", "last2"}
+    cols = [c for c in _STAT_COLS if c in need or c == "nrows"]
     # Shifted bucket clock: τ = bucket + offset, so step windows are
     # [t_i − W, t_i] on the τ axis with integer-µs arithmetic.
-    tau = F.unix_micros("bucket") + F.lit(offset_us)
+    tau = f"unix_micros(bucket) + {offset_us}"
     # FULL contribution: bucket [b, b+g) ⊂ [t_i − W, t_i] ⟺
     # t_i − W ≤ τ and τ + g ≤ t_i ⟺ ceil((τ+g−start)/s) ≤ i ≤
     # floor((τ+W−start)/s). ceil via negated floor stays integral.
-    i0 = F.greatest(
-        F.lit(0),
-        -F.floor(-(tau + F.lit(g_us) - F.lit(start_us)) / F.lit(s_us))
-        .cast("long"),
+    i0 = (
+        f"greatest(0, -CAST(floor(-({tau} + {g_us} - {start_us}) "
+        f"/ {s_us}) AS BIGINT))"
     )
-    i1 = F.least(
-        F.lit(n_steps),
-        F.floor((tau + F.lit(r_us) - F.lit(start_us)) / F.lit(s_us))
-        .cast("long"),
+    i1 = (
+        f"least({n_steps}, CAST(floor(({tau} + {r_us} - {start_us}) "
+        f"/ {s_us}) AS BIGINT))"
     )
-    if need is None:
-        # Default: every SCALAR stat (the pre-round-13 full row). The
-        # ordered array stats are collect_list merges — only built
-        # when a fold explicitly asks for them.
-        need = frozenset(_STAT_COLS) - {"seq", "last2"}
-    else:
-        need = frozenset(need) | {"nrows"}
-    first_s = F.struct(F.col("tfirst").alias("t"),
-                       F.col("vfirst").alias("v"))
-    last_s = F.struct(F.col("tlast").alias("t"),
-                      F.col("vlast").alias("v"))
-    prev_s = F.when(
-        F.col("tprev").isNotNull(),
-        F.struct(F.col("tprev").alias("t"), F.col("vprev").alias("v")),
-    )
-    full_expr = {
-        "cnt": F.col("cnt"),
-        "vsum": F.col("vsum"),
-        "vmin": F.col("vmin"),
-        "vmax": F.col("vmax"),
-        "first": first_s,
-        "last": last_s,
-        "vsum2": F.col("vsum2"),
-        # Pre-v3 rows read nrows as null → the raw row count falls
-        # back to the non-null sample count (the pre-round-13 guard),
-        # so the serve fold needs no schema flag in-plan.
-        "nrows": F.coalesce(F.col("nrows"), F.col("cnt")),
-        "seq": F.struct(
-            first_s.alias("first"),
-            last_s.alias("last"),
-            F.coalesce(F.col("nresets"), F.lit(0)).alias("nr"),
-            F.coalesce(F.col("nchanges"), F.lit(0)).alias("nc"),
-        ),
-        "last2": F.struct(
-            last_s.alias("last"), prev_s.alias("prev")
-        ),
-    }
-    cols = [c for c in _STAT_COLS if c in need]
-    full = (
-        buckets.filter(i0 <= i1)
-        .withColumn("__i", F.explode(F.sequence(i0, i1)))
-        .select(
-            "sensor_id", "__i",
-            *[full_expr[c].alias(c) for c in cols],
-        )
+    full = buckets.filter(f"{i0} <= {i1}").selectExpr(
+        "sensor_id", f"explode(sequence({i0}, {i1})) AS __i",
+        *[f"{_FULL_SQL[c]} AS `{c}`" for c in cols],
     )
     # EDGE contribution: the closed window's right endpoint t_i is the
     # LEFT boundary of bucket t_i — only that bucket's boundary-exact
@@ -341,180 +363,111 @@ def range_windows(
     # scan the rollup twice — measured FASTER than fusing them into a
     # single array-of-structs explode (columnar re-scans of a rollup-
     # sized table are cheap; wide struct-array construction is not:
-    # the fused form doubled the served wall at 10×). Edge samples all
-    # share the boundary instant, so under struct(time, value)
-    # ordering their first is (boundary, emin) and their last is
-    # (boundary, emax) — the first/last fold needs no new edge columns.
-    d = tau - F.lit(start_us)
-    # coalesce: a v3 row counts null-valued boundary samples too
-    # (enrows), so a window whose only content is a null sample at the
-    # boundary still produces its row — matching the raw path; pre-v3
-    # rows keep the non-null-count guard they were built under.
+    # the fused form doubled the served wall at 10×). coalesce: a v3
+    # row counts null-valued boundary samples too (enrows), so a
+    # window whose only content is a null sample at the boundary still
+    # produces its row — matching the raw path; pre-v3 rows keep the
+    # non-null-count guard they were built under.
+    d = f"({tau} - {start_us})"
     edge = buckets.filter(
-        (d >= 0)
-        & (d % F.lit(s_us) == 0)
-        & (d / F.lit(s_us) <= n_steps)
-        & (F.coalesce(F.col("enrows"), F.col("ecnt")) > 0)
+        f"{d} >= 0 AND {d} % {s_us} = 0 AND {d} / {s_us} <= {n_steps} "
+        "AND coalesce(enrows, ecnt) > 0"
+    ).selectExpr(
+        "sensor_id", f"CAST({d} / {s_us} AS BIGINT) AS __i",
+        *[f"{_EDGE_SQL[c]} AS `{c}`" for c in cols],
     )
-    efirst_s = F.struct(F.col("bucket").alias("t"),
-                        F.col("emin").alias("v"))
-    elast_s = F.struct(F.col("bucket").alias("t"),
-                       F.col("emax").alias("v"))
-    # Edge samples all share the boundary instant: under the raw
-    # evaluator's (time, value) ordering they are value-sorted, so
-    # resets within the group are 0 (ascending), changes are
-    # (#distinct values − 1), and the second-to-last sample is the
-    # second-largest value (evprev).
-    eprev_s = F.when(
-        F.col("ecnt") >= 2,
-        F.struct(F.col("bucket").alias("t"),
-                 F.col("evprev").alias("v")),
-    )
-    edge_expr = {
-        "cnt": F.col("ecnt"),
-        "vsum": F.col("esum"),
-        "vmin": F.col("emin"),
-        "vmax": F.col("emax"),
-        "first": efirst_s,
-        "last": elast_s,
-        "vsum2": F.col("esum2"),
-        "nrows": F.coalesce(F.col("enrows"), F.col("ecnt")),
-        "seq": F.struct(
-            efirst_s.alias("first"),
-            elast_s.alias("last"),
-            F.lit(0).cast("long").alias("nr"),
-            F.greatest(
-                F.lit(0).cast("long"),
-                F.coalesce(F.col("endv"), F.lit(1)) - 1,
-            ).alias("nc"),
-        ),
-        "last2": F.struct(
-            elast_s.alias("last"), eprev_s.alias("prev")
-        ),
-    }
-    edge = edge.select(
-        "sensor_id",
-        (d / F.lit(s_us)).cast("long").alias("__i"),
-        *[edge_expr[c].alias(c) for c in cols],
-    )
-    merge = {
-        "cnt": F.sum, "vsum": F.sum, "vmin": F.min, "vmax": F.max,
-        "first": F.min, "last": F.max, "vsum2": F.sum,
-        "nrows": F.sum,
-        # Ordered merges: temporally sorted (buckets are time-disjoint
-        # and the outer struct sorts on its first field — `first`
-        # resp. `last`), W/grain-bounded per window.
-        "seq": lambda c: F.sort_array(F.collect_list(c)),
-        "last2": lambda c: F.reverse(F.sort_array(F.collect_list(c))),
-    }
     return (
         full.unionByName(edge)
         .groupBy("sensor_id", "__i")
-        .agg(*[merge[c](c).alias(c) for c in cols])
+        .agg(*[
+            F.expr(f"{_MERGE_SQL[c].format(f'`{c}`')} AS `{c}`")
+            for c in cols
+        ])
         # A window no sample falls in produces NO row (PromQL): every
         # contributing bucket row carries nrows ≥ 1, so this only
         # guards degenerate unions.
-        .filter(F.col("nrows") > 0)
+        .filter("nrows > 0")
     )
 
 
-def _func_value(func: str | None):
-    """The quartet expression for one served window reduction, plus an
-    optional row filter (built lazily — Column construction needs an
-    active session). The rise family mirrors
-    promql_ext._per_series_agg exactly: rise = last.v − first.v, span
-    in seconds, single-sample (span == 0) windows DROP — the when()
-    guard keeps ANSI mode from throwing on the 0-span division before
-    the filter applies."""
-    # Population variance from the mergeable moments (Σv²/n − μ²) —
-    # clamped at 0: the subtraction can go ULP-negative where the true
-    # variance is ~0, and Prometheus returns 0 there, not a NaN sqrt.
-    mean = F.col("vsum") / F.col("cnt")
-    pvar = F.greatest(
-        F.lit(0.0), F.col("vsum2") / F.col("cnt") - mean * mean
+# The served window reductions as SQL text over range_windows' stats:
+# func → (value, optional row filter). The rise family mirrors
+# promql_ext._per_series_agg exactly: rise = last.v − first.v, span in
+# seconds, single-sample (span == 0) windows DROP — the CASE guard
+# keeps ANSI mode from throwing on the 0-span division before the
+# filter applies. Population variance folds from the mergeable
+# moments (Σv²/n − μ²), clamped at 0: the subtraction can go
+# ULP-negative where the true variance is ~0, and Prometheus returns
+# 0 there, not a NaN sqrt.
+_PVAR = "greatest(0.0D, vsum2 / cnt - vsum / cnt * (vsum / cnt))"
+_SPAN = "((unix_micros(`last`.t) - unix_micros(`first`.t)) / 1e6)"
+_RISE = "(`last`.v - `first`.v)"
+# resets/changes — the ordered fold: Σ within-bucket counters + one
+# boundary term per ADJACENT bucket pair (previous bucket's last
+# sample against the next one's first — exactly the raw evaluator's
+# lag pair at the bucket crossing, promql_ext:1914). ``seq`` is
+# already time-sorted; W/grain entries per window, pure array HOFs,
+# no Python. coalesce: null-valued boundary samples compare to null
+# and contribute 0, the raw fold's null-skipping sum.
+_ORDERED = (
+    "CAST(aggregate(seq, CAST(0 AS BIGINT), (a, x) -> a + x.{field}) "
+    "+ aggregate(zip_with(slice(seq, 1, size(seq) - 1), "
+    "slice(seq, 2, size(seq) - 1), (a, b) -> coalesce(CAST("
+    "b.`first`.v {op} a.`last`.v AS BIGINT), 0)), CAST(0 AS BIGINT), "
+    "(a, x) -> a + x) AS DOUBLE)"
+)
+# irate/idelta — the window's last two samples from the per-bucket
+# (last, prev) structs, sorted desc by last: the latest bucket holds
+# the last sample; the second-to-last is that bucket's own prev, or —
+# when it held a single sample — the next-latest bucket's last.
+# try_element_at: NULL past the end (ANSI element_at throws on
+# single-bucket windows). Counter-reset handling and the span-0 drop
+# mirror promql_ext._per_series_agg's top-2 fold exactly.
+_L2 = "try_element_at(last2, 1).`last`"
+_P2 = (
+    "coalesce(try_element_at(last2, 1).prev, "
+    "try_element_at(last2, 2).`last`)"
+)
+_SPAN2 = f"((unix_micros({_L2}.t) - unix_micros({_P2}.t)) / 1e6)"
+_KEEP2 = f"{_P2} IS NOT NULL AND {_SPAN2} > 0"
+_VALUE_SQL = {
+    "sum_over_time": ("vsum", None),
+    "count_over_time": ("CAST(cnt AS DOUBLE)", None),
+    "min_over_time": ("vmin", None),
+    "max_over_time": ("vmax", None),
+    "avg_over_time": ("vsum / cnt", None),
+    "stdvar_over_time": (_PVAR, None),
+    "stddev_over_time": (f"sqrt({_PVAR})", None),
+    # present: any window that produced a row has >= 1 sample.
+    "present_over_time": ("1.0D", None),
+    None: ("`last`.v", None),
+    "last_over_time": ("`last`.v", None),
+    # Last sample's epoch seconds (µs fraction preserved) — the same
+    # arithmetic as the raw path's max(unix_micros)/1e6, bit-equal.
+    "timestamp": ("unix_micros(`last`.t) / 1e6", None),
+    "rate": (
+        f"CASE WHEN {_SPAN} > 0 THEN {_RISE} / {_SPAN} END",
+        f"{_SPAN} > 0",
+    ),
+    "increase": (_RISE, f"{_SPAN} > 0"),
+    "delta": (_RISE, f"{_SPAN} > 0"),
+    "resets": (_ORDERED.format(field="nr", op="<"), None),
+    "changes": (_ORDERED.format(field="nc", op="!="), None),
+    "irate": (
+        f"CASE WHEN {_KEEP2} THEN (CASE WHEN {_L2}.v < {_P2}.v THEN "
+        f"{_L2}.v ELSE {_L2}.v - {_P2}.v END) / {_SPAN2} END",
+        _KEEP2,
+    ),
+    "idelta": (f"{_L2}.v - {_P2}.v", _KEEP2),
+}
+
+
+def _step_time(start: dt.datetime, step_seconds: float) -> Column:
+    """The step instant ``t = start + __i·step`` as a timestamp."""
+    return F.expr(
+        f"timestamp_micros(CAST({_epoch_us(start)} + __i * "
+        f"{int(step_seconds * 1_000_000)} AS BIGINT)) AS t"
     )
-    simple = {
-        "sum_over_time": F.col("vsum"),
-        "count_over_time": F.col("cnt").cast("double"),
-        "min_over_time": F.col("vmin"),
-        "max_over_time": F.col("vmax"),
-        "avg_over_time": F.col("vsum") / F.col("cnt"),
-        "stdvar_over_time": pvar,
-        "stddev_over_time": F.sqrt(pvar),
-        # present: any window that produced a row has >= 1 sample.
-        "present_over_time": F.lit(1.0),
-    }
-    if func in simple:
-        return simple[func], None
-    if func in ("resets", "changes"):
-        # The ordered fold: Σ within-bucket counters + one boundary
-        # term per ADJACENT bucket pair (previous bucket's last sample
-        # against the next one's first — exactly the raw evaluator's
-        # lag pair at the bucket crossing, promql_ext:1914). ``seq``
-        # is already time-sorted; W/grain entries per window, pure
-        # array HOFs, no Python. coalesce: null-valued boundary
-        # samples compare to null and contribute 0, the raw fold's
-        # null-skipping sum.
-        seq = F.col("seq")
-        n = F.size(seq)
-        inner = F.aggregate(
-            seq,
-            F.lit(0).cast("long"),
-            lambda a, x: a + x["nr" if func == "resets" else "nc"],
-        )
-
-        def hit(a, b):
-            cmp = (
-                b["first"]["v"] < a["last"]["v"]
-                if func == "resets"
-                else b["first"]["v"] != a["last"]["v"]
-            )
-            return F.coalesce(cmp.cast("long"), F.lit(0))
-
-        boundary = F.aggregate(
-            F.zip_with(F.slice(seq, 1, n - 1), F.slice(seq, 2, n - 1),
-                       hit),
-            F.lit(0).cast("long"),
-            lambda a, x: a + x,
-        )
-        return (inner + boundary).cast("double"), None
-    if func in ("irate", "idelta"):
-        # The window's last two samples from the per-bucket (last,
-        # prev) structs, sorted desc by last: the latest bucket holds
-        # the last sample; the second-to-last is that bucket's own
-        # prev, or — when it held a single sample — the next-latest
-        # bucket's last. Counter-reset handling and the span-0 drop
-        # mirror promql_ext._per_series_agg's top-2 fold exactly.
-        arr = F.col("last2")
-        # try_element_at: NULL past the end (ANSI element_at throws
-        # on single-bucket windows).
-        e1 = F.try_element_at(arr, F.lit(1))
-        e2 = F.try_element_at(arr, F.lit(2))
-        last_s = e1["last"]
-        prev_s = F.coalesce(e1["prev"], e2["last"])
-        span = (
-            F.unix_micros(last_s["t"]) - F.unix_micros(prev_s["t"])
-        ) / 1e6
-        keep = prev_s.isNotNull() & (span > 0)
-        if func == "irate":
-            rise = F.when(
-                last_s["v"] < prev_s["v"], last_s["v"]
-            ).otherwise(last_s["v"] - prev_s["v"])
-            return F.when(keep, rise / span), keep
-        return last_s["v"] - prev_s["v"], keep
-    first, last = F.col("first"), F.col("last")
-    if func in (None, "last_over_time"):
-        return last["v"], None
-    if func == "timestamp":
-        # Last sample's epoch seconds (µs fraction preserved) — the
-        # same arithmetic as the raw path's max(unix_micros)/1e6,
-        # bit-equal.
-        return F.unix_micros(last["t"]) / 1e6, None
-    span = (F.unix_micros(last["t"]) - F.unix_micros(first["t"])) / 1e6
-    rise = last["v"] - first["v"]
-    if func == "rate":
-        return F.when(span > 0, rise / span), span > 0
-    return rise, span > 0  # increase / delta
 
 
 def _served_window_values(
@@ -527,7 +480,7 @@ def _served_window_values(
     like the raw path's pre-aggregation union."""
     q = eq.selector
     window_s = (q.end_time - q.start_time).total_seconds()
-    value, keep = _func_value(eq.func)
+    value, keep = _VALUE_SQL[eq.func]
     need = _needed_stats(eq.func)
     out = None
     for store, stype in pairs:
@@ -545,7 +498,7 @@ def _served_window_values(
         )
         if keep is not None:
             win = win.filter(keep)
-        frame = win.select("sensor_id", "__i", value.alias("value"))
+        frame = win.selectExpr("sensor_id", "__i", f"{value} AS value")
         out = frame if out is None else out.unionByName(frame)
     return out
 
@@ -579,16 +532,11 @@ def evaluate_range_rollup(
         [(store, stype), *extra], eq, selected,
         start, end, step_seconds, off_us, realtime,
     )
-    s_us = int(step_seconds * 1_000_000)
-    start_us = _epoch_us(start)
-    t_col = F.timestamp_micros(
-        (F.lit(start_us) + F.col("__i") * F.lit(s_us)).cast("long")
-    ).alias("t")
     out = win.join(
         F.broadcast(selected.select("sensor_id", "name", "labels")),
         "sensor_id",
     )
-    return _finish_range(out, eq, t_col)
+    return _finish_range(out, eq, _step_time(start, step_seconds))
 
 
 def rollup_serveable_instant(eq, grain_s: int) -> bool:
@@ -803,13 +751,8 @@ def evaluate_range_quantile(
             stat="mad" if mad else "quantile",
         )
         out = win if out is None else out.unionByName(win)
-    s_us = int(step_seconds * 1_000_000)
-    start_us = _epoch_us(start)
-    t_col = F.timestamp_micros(
-        (F.lit(start_us) + F.col("__i") * F.lit(s_us)).cast("long")
-    ).alias("t")
     joined = out.join(
         F.broadcast(selected.select("sensor_id", "name", "labels")),
         "sensor_id",
     )
-    return _finish_range(joined, eq, t_col)
+    return _finish_range(joined, eq, _step_time(start, step_seconds))

@@ -41,6 +41,7 @@ from sensapp_spark.datamodel.types import (
     value_table_name,
 )
 from sensapp_spark.ingest.csv_importer import IngestBatch
+from sensapp_spark.operators.selection import utc_lit
 from sensapp_spark.storage import zonemap as zm
 from sensapp_spark.storage.logstore import get_store
 
@@ -460,10 +461,10 @@ class SensorLake:
         df = self._pruned_scan(data, schema, start, end, sensor_ids)
         if start is not None:
             df = df.filter(F.col(MONTH_COL) >= start.strftime("%Y-%m"))
-            df = df.filter(F.col("time") >= F.lit(start))
+            df = df.filter(F.col("time") >= utc_lit(start))
         if end is not None:
             df = df.filter(F.col(MONTH_COL) <= end.strftime("%Y-%m"))
-            df = df.filter(F.col("time") <= F.lit(end))
+            df = df.filter(F.col("time") <= utc_lit(end))
         if sensor_ids is not None:
             df = df.filter(F.col("sensor_id").isin(list(sensor_ids)))
         return df

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sensapp_spark.datamodel.types import SensorType
+from sensapp_spark.operators.selection import utc_lit
 from sensapp_spark.storage.lake import MONTH_COL
 from sensapp_spark.storage.rollup import RollupStore
 
@@ -185,9 +186,9 @@ class QuantileRollupStore(RollupStore):
             )
         )
         if start is not None:
-            out = out.filter(F.col("bucket") >= F.lit(start))
+            out = out.filter(F.col("bucket") >= utc_lit(start))
         if end is not None:
-            out = out.filter(F.col("bucket") <= F.lit(end))
+            out = out.filter(F.col("bucket") <= utc_lit(end))
         return out
 
 

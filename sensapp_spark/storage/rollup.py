@@ -52,6 +52,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sensapp_spark.datamodel.types import SensorType
+from sensapp_spark.operators.selection import utc_lit
 from sensapp_spark.storage.lake import (
     MONTH_COL,
     CommitConflict,
@@ -67,6 +68,7 @@ from sensapp_spark.storage.lake import (
     resolve_table,
 )
 from sensapp_spark.storage.logstore import get_store
+from sensapp_spark.storage.zonemap import to_epoch_us
 
 ROLLUP_META = "_rollup_meta.json"
 
@@ -395,19 +397,24 @@ class RollupStore:
         Month partition pruning applies through the hive layout."""
         start = _utc_naive(start)
         end = _utc_naive(end)
-        schema_df = self.spark.createDataFrame([], self.SCHEMA)
         data = resolve_table(self._path(stype))
         if data is None:
-            return schema_df
+            return self.spark.createDataFrame([], self.SCHEMA)
         df = self.spark.read.schema(
-            schema_df.schema.add(MONTH_COL, "string")
+            f"{self.SCHEMA}, {MONTH_COL} string"
         ).parquet(data)
+        # One filter string with integer-µs bounds: a handful of JVM
+        # calls on the served path's hot read instead of a Column tree,
+        # and no process-timezone conversion of the bounds.
+        conds = []
         if start is not None:
-            df = df.filter(F.col(MONTH_COL) >= start.strftime("%Y-%m"))
-            df = df.filter(F.col("bucket") >= F.lit(start))
+            conds += [f"{MONTH_COL} >= '{start:%Y-%m}'",
+                      f"bucket >= timestamp_micros({to_epoch_us(start)})"]
         if end is not None:
-            df = df.filter(F.col(MONTH_COL) <= end.strftime("%Y-%m"))
-            df = df.filter(F.col("bucket") <= F.lit(end))
+            conds += [f"{MONTH_COL} <= '{end:%Y-%m}'",
+                      f"bucket <= timestamp_micros({to_epoch_us(end)})"]
+        if conds:
+            df = df.filter(" AND ".join(conds))
         return df.drop(MONTH_COL)
 
     # -- maintenance ---------------------------------------------------------
@@ -913,7 +920,7 @@ class RollupStore:
         # Fold the ordered stats from the sorted sequence: counters
         # are Σ within-bucket + a boundary term per adjacent pair
         # (the serving layer's window fold uses the same identity —
-        # query/rollup_serve.py _func_value); the folded second-to-
+        # query/rollup_serve.py _VALUE_SQL); the folded second-to-
         # last sample is the latest bucket's prev, or the
         # second-latest bucket's last when that bucket held only one
         # sample.
@@ -968,9 +975,9 @@ class RollupStore:
             "sensor_id", "bucket", *self.VALUE_COLS
         )
         if start is not None:
-            out = out.filter(F.col("bucket") >= F.lit(start))
+            out = out.filter(F.col("bucket") >= utc_lit(start))
         if end is not None:
-            out = out.filter(F.col("bucket") <= F.lit(end))
+            out = out.filter(F.col("bucket") <= utc_lit(end))
         return out
 
     def _direct_buckets(self, stype, start, end) -> DataFrame:
@@ -989,9 +996,9 @@ class RollupStore:
             else self.lake.values(stype, start=start, end=pad_end)
         ).drop(MONTH_COL)
         if start is not None:
-            out = out.filter(F.col("bucket") >= F.lit(start))
+            out = out.filter(F.col("bucket") >= utc_lit(start))
         if end is not None:
-            out = out.filter(F.col("bucket") <= F.lit(end))
+            out = out.filter(F.col("bucket") <= utc_lit(end))
         return out
 
     # -- real-time reads -----------------------------------------------------
@@ -1050,9 +1057,9 @@ class RollupStore:
             keys, list(self.KEYS), "anti"
         ).unionByName(fresh.drop(MONTH_COL))
         if start is not None:
-            out = out.filter(F.col("bucket") >= F.lit(start))
+            out = out.filter(F.col("bucket") >= utc_lit(start))
         if end is not None:
-            out = out.filter(F.col("bucket") <= F.lit(end))
+            out = out.filter(F.col("bucket") <= utc_lit(end))
         return out
 
 
@@ -1215,9 +1222,9 @@ class SketchRollupStore(RollupStore):
             )
         )
         if start is not None:
-            out = out.filter(F.col("bucket") >= F.lit(start))
+            out = out.filter(F.col("bucket") >= utc_lit(start))
         if end is not None:
-            out = out.filter(F.col("bucket") <= F.lit(end))
+            out = out.filter(F.col("bucket") <= utc_lit(end))
         return out
 
     # -- estimates -----------------------------------------------------------

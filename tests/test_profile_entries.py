@@ -32,3 +32,7 @@ def test_profile_entry_counts_jobs(spark):
             assert rec[f"{phase}_{unit}"] >= 0
         assert rec[f"{phase}_s"] >= 0
     assert rec["exec_stages"] >= rec["exec_jobs"]
+    # Building any frame talks to the JVM; the noop write is one
+    # action, a handful of calls at least.
+    assert rec["build_py4j"] > 0
+    assert rec["exec_py4j"] > 0

@@ -11,6 +11,7 @@ correct iff it is indistinguishable from that, cheaper."""
 import datetime as dt
 import os
 import shutil
+import time
 
 import pytest
 
@@ -486,3 +487,46 @@ def test_concurrent_refresh_of_disjoint_stores_is_isolated(
     assert q_rolled == q_direct
     assert store.refresh(SensorType.FLOAT)["mode"] == "noop"
     assert qstore.refresh(SensorType.FLOAT)["mode"] == "noop"
+
+
+def test_time_bounds_ignore_process_timezone(spark, tmp_path):
+    """Naive bounds mean UTC whatever the driver process's local zone.
+    PySpark converts a naive datetime literal through that zone, so an
+    unpinned bound shifts every window by the zone's offset (5 h under
+    New York time in January)."""
+    lake = SensorLake(spark, str(tmp_path / "lake"))
+    day = dt.datetime(2024, 1, 10)
+    lake.append_values(
+        SensorType.FLOAT,
+        _vals(spark, [("a", day + h * H, float(h)) for h in range(24)]),
+    )
+    store = RollupStore(lake)
+    store.refresh(SensorType.FLOAT)
+    lo, hi = day + 2 * H, day + 6 * H
+
+    def reads():
+        # Epoch µs, not collected datetimes: collect itself renders
+        # timestamps in the process zone.
+        vals = lake.values(SensorType.FLOAT, start=lo, end=hi)
+        buckets = store.read(SensorType.FLOAT, lo, hi)
+        return (
+            sorted(r[0] for r in vals.select(F.unix_micros("time"))
+                   .collect()),
+            sorted(r[0] for r in buckets.select(F.unix_micros("bucket"))
+                   .collect()),
+        )
+
+    utc = reads()
+    prev = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        shifted = reads()
+    finally:
+        if prev is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = prev
+        time.tzset()
+    assert len(utc[0]) == 5 and len(utc[1]) == 5
+    assert shifted == utc

@@ -250,6 +250,65 @@ def test_served_rise_family_equals_raw(served_lake, expr):
     )
 
 
+# One function per stat family: the scalar moments, the first/last
+# rise fold, the ordered reset/change sequence and the last-two-sample
+# fold — each family is its own SQL template in rollup_serve.
+FAMILY_FUNCS = ("avg_over_time", "rate", "resets", "irate")
+
+
+def test_served_equals_raw_one_func_per_family(served_lake):
+    """The smoke-tier guard on the served value expressions: one
+    served == raw comparison per stat family, overlapping windows
+    (W = 2h, step 1h) so every fold merges several buckets plus the
+    boundary edge."""
+    lake, sensors, store = served_lake
+    store.refresh(SensorType.FLOAT)
+    for func in FAMILY_FUNCS:
+        _assert_served_equals_raw(
+            store, lake, sensors, f"{func}(m[2h])",
+            start=T0 + dt.timedelta(hours=1),
+            end=T0 + dt.timedelta(hours=4), step=3600,
+        )
+
+
+# py4j calls the Column-built plan sent to construct the eight frames
+# in test_served_plan_construction_py4j_calls (pyspark 4.1; one py4j
+# Column per expression node, each with its call-site origin capture).
+COLUMN_BUILT_PY4J_CALLS = 17326
+
+
+def test_served_plan_construction_py4j_calls(served_lake):
+    """Building a served frame is driver time before any Spark job
+    starts, so the plan is built from SQL text — one selectExpr/filter
+    string per branch — not one py4j Column per expression node. Pins
+    construction (no action runs) at most a fifth of the Column-built
+    plan's JVM calls, range and anchored-instant, one function per
+    stat family."""
+    from scripts.profile_entries import py4j_calls
+    from sensapp_spark.query.rollup_serve import evaluate_instant_rollup
+
+    lake, sensors, store = served_lake
+    store.refresh(SensorType.FLOAT)
+    anchor = int(
+        (T0 + dt.timedelta(hours=3)).replace(
+            tzinfo=dt.timezone.utc
+        ).timestamp()
+    )
+    queries = [
+        (parse_extended(f"{f}(m[2h])", now=NOW),
+         parse_extended(f"{f}(m[2h] @ {anchor})", now=NOW))
+        for f in FAMILY_FUNCS
+    ]
+    with py4j_calls() as calls:
+        for eq, eq_at in queries:
+            evaluate_range_rollup(
+                store, sensors, eq, T0 + dt.timedelta(hours=1),
+                T0 + dt.timedelta(hours=4), 3600, now=NOW,
+            )
+            evaluate_instant_rollup(store, sensors, eq_at)
+    assert 0 < calls[0] <= COLUMN_BUILT_PY4J_CALLS // 5, calls[0]
+
+
 def test_served_rate_plan_reads_rollup_not_raw(served_lake):
     """The counter-panel claim: a served rate() plans over _rollups/
     files only."""
