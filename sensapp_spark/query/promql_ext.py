@@ -24,7 +24,8 @@ query the anchored expression is constant across steps — one instant
 evaluation broadcast onto the step grid, Prometheus semantics). The
 remaining didactic rejections are the genuinely rare tail: 4+-level
 aggregation nesting, 2+-level binary nesting, by/without-grouped
-binary operands, nested subqueries, and ``@`` inside a subquery;
+operands of one-to-one vector matching, nested subqueries, and ``@``
+inside a subquery;
 those raise the didactic ``PromQLError`` naming the construct.
 
 Evaluation shapes (all single-shuffle, map-side partial aggregates):
@@ -41,6 +42,19 @@ Evaluation shapes (all single-shuffle, map-side partial aggregates):
 * ``topk``/``bottomk`` → row_number window over the per-series instant
   vector; the window input is one row per series (dimension-sized), so
   the single-partition global window is not a scale hazard.
+
+The step key: an instant evaluation is a range evaluation with no step
+column. Everything above the per-series reduction is written once and
+parameterized by it — the tail (:func:`_finish`: label ops, the
+aggregation operators, post functions, nested aggregation) groups and
+partitions by ``t`` only when a step column is given, and the binary
+operators (:func:`_binary`) match, reduce ``scalar()`` and join on
+``[]`` for ``evaluate_binary`` and ``["t"]`` for
+``evaluate_range_binary``. The two modes differ only in how an operand
+is evaluated (a callback) and in ``time()``, which is the parse-time
+literal on an instant and the step's own ``t`` on a range. The range
+step grid itself (``start + i·step``, each sample exploded to the step
+indices whose window covers it) is :class:`_StepGrid`.
 """
 
 from __future__ import annotations
@@ -49,6 +63,7 @@ import datetime as dt
 import math
 import re
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -1636,11 +1651,56 @@ def _parse_matching(rest: str) -> tuple[str | None, list[str], str]:
 
 
 def _epoch_us(ts: dt.datetime) -> int:
-    """Naive timestamps are interpreted as UTC (the engine's session
-    timezone) — same convention as evaluate_range."""
+    """Epoch µs of ``ts``. Naive timestamps are interpreted as UTC (the
+    engine's session timezone); aware ones are converted, never
+    relabelled."""
     if ts.tzinfo is None:
         ts = ts.replace(tzinfo=dt.timezone.utc)
     return int(ts.timestamp() * 1_000_000)
+
+
+class _StepGrid(NamedTuple):
+    """A range query's step grid: ``t = start + i·step`` for step index
+    ``i`` in ``[0, n_steps]``, in epoch µs."""
+
+    start_us: int
+    s_us: int
+    n_steps: int
+
+    @classmethod
+    def of(
+        cls, start: dt.datetime, end: dt.datetime, step_seconds: float
+    ) -> "_StepGrid":
+        start_us, s_us = _epoch_us(start), int(step_seconds * 1_000_000)
+        return cls(start_us, s_us, (_epoch_us(end) - start_us) // s_us)
+
+    def t(self, index: str = "__i") -> F.Column:
+        """The step timestamp ``t`` of the step-index column ``index``."""
+        return F.timestamp_micros(
+            (F.lit(self.start_us) + F.col(index) * self.s_us).cast("long")
+        ).alias("t")
+
+    def explode(self, frame: DataFrame, tau: F.Column, r_us: int) -> DataFrame:
+        """``frame`` once per step index ``__i`` whose closed window
+        ``[t − R, t]`` covers the row's instant ``tau`` (µs) — a bounded
+        fan-out of ceil(R/step) rows per row, the sliding window as an
+        explode."""
+        start_us, s_us = self.start_us, self.s_us
+        idx0 = F.greatest(
+            F.lit(0), -F.floor((tau - F.lit(start_us)) / -s_us).cast("long")
+        )  # ceil((tau-start)/S) via negated floor — stays integral
+        idx1 = F.least(
+            F.lit(self.n_steps),
+            F.floor(
+                (tau + F.lit(r_us) - F.lit(start_us)) / s_us
+            ).cast("long"),
+        )
+        # sequence() counts DOWNWARD for idx0 > idx1 (a row falling
+        # between two step windows has an empty step set) — filter
+        # before the explode.
+        return frame.filter(idx0 <= idx1).withColumn(
+            "__i", F.explode(F.sequence(idx0, idx1))
+        )
 
 
 _OVER_TIME = {
@@ -1665,6 +1725,19 @@ _AGG_FNS = {
     "stddev": F.stddev_pop,
     "stdvar": F.var_pop,
 }
+
+
+def _agg_column(agg: str, param: float | None = None) -> F.Column:
+    """The reduction column of aggregation operator ``agg`` over
+    ``value`` — every aggregation level (inner, outer, third, and the
+    one over a histogram quantile) reduces through this."""
+    if agg == "quantile":
+        return F.percentile("value", F.lit(param)).cast("double")
+    if agg == "group":
+        return F.max(F.lit(1.0))
+    col = _AGG_FNS[agg]("value")
+    return col.cast("long") if agg == "count" else col
+
 
 # Outer range functions supported over a subquery's step samples.
 SUBQUERY_OUTER = frozenset(
@@ -2137,14 +2210,7 @@ def _const_range_vector(
     the Grafana fallback): a top-level constant range query stays a
     didactic 400 in evaluate_range, but as an operand the constant has
     a well-defined per-step value and costs one ``spark.range``."""
-    s_us = int(step_seconds * 1_000_000)
-    start_us = int(
-        start.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6
-    )
-    n_steps = int(
-        (end.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6 - start_us)
-        // s_us
-    )
+    grid = _StepGrid.of(start, end, step_seconds)
     # time()-derived constants are only constant at ONE evaluation
     # instant: Prometheus evaluates time() independently at every step,
     # so the range form emits the per-step timestamp — repeating the
@@ -2152,25 +2218,18 @@ def _const_range_vector(
     # advisor). vector(s) and number literals stay on the constant
     # path.
     value = (
-        (F.lit(start_us) + F.col("id") * F.lit(s_us)) / F.lit(1e6)
+        (F.lit(grid.start_us) + F.col("id") * F.lit(grid.s_us)) / F.lit(1e6)
         if eq.const_is_time
         else F.lit(eq.const).cast("double")
     )
-    out = spark.range(n_steps + 1).select(
+    out = spark.range(grid.n_steps + 1).select(
         F.lit(None).cast("string").alias("sensor_id"),
         F.lit(None).cast("string").alias("name"),
         F.create_map().cast("map<string,string>").alias("labels"),
         F.col("id").alias("__i"),
         value.cast("double").alias("value"),
     )
-    if eq.label_ops:
-        out = _apply_label_ops(out, eq.label_ops)
-    if eq.series_post:
-        out = _apply_post(out, eq.series_post)
-    t_col = F.timestamp_micros(
-        (F.lit(start_us) + F.col("__i") * F.lit(s_us)).cast("long")
-    ).alias("t")
-    return _finish_range(out, eq, t_col)
+    return _finish(out, eq, grid.t())
 
 
 def _const_vector(spark, eq: ExtendedQuery) -> DataFrame:
@@ -2183,11 +2242,7 @@ def _const_vector(spark, eq: ExtendedQuery) -> DataFrame:
         F.create_map().cast("map<string,string>").alias("labels"),
         F.lit(eq.const).cast("double").alias("value"),
     )
-    if eq.label_ops:
-        one = _apply_label_ops(one, eq.label_ops)
-    if eq.series_post:
-        one = _apply_post(one, eq.series_post)
-    return _finish_instant(one, eq)
+    return _finish(one, eq)
 
 
 def _evaluate_extended_core(
@@ -2242,26 +2297,16 @@ def _evaluate_extended_core(
             # Ungrouped outer aggregation over the quantile vector
             # (max(histogram_quantile(…))) — by/without outer grouping
             # is parse-rejected.
-            if eq.agg == "quantile":
-                agg_col = F.percentile("value", F.lit(eq.param)).cast(
-                    "double"
-                )
-            else:
-                agg_col = _AGG_FNS[eq.agg]("value")
-                if eq.agg == "count":
-                    agg_col = agg_col.cast("long")
-            hq = hq.groupBy().agg(agg_col.alias("value"))
+            hq = hq.groupBy().agg(
+                _agg_column(eq.agg, eq.param).alias("value")
+            )
         return _apply_post(hq, eq.post)
     if eq.func in ABSENT_FUNCS:
         return _evaluate_absent(sensors, values, eq)
     if eq.sub_inner is not None:
         out, series_shaped = _evaluate_subquery(sensors, values, eq)
         if series_shaped:
-            if eq.label_ops:
-                out = _apply_label_ops(out, eq.label_ops)
-            if eq.series_post:
-                out = _apply_post(out, eq.series_post)
-            return _finish_instant(out, eq)
+            return _finish(out, eq)
         # Aggregated-inner subqueries already carry their group keys;
         # the (parse-rejected) enclosing aggregation never applies.
         return _apply_post(out, eq.post)
@@ -2301,21 +2346,26 @@ def _evaluate_extended_core(
         if cache is not None:
             out = out.localCheckpoint(eager=False)
             cache[key] = out
-    if eq.label_ops:
-        out = _apply_label_ops(out, eq.label_ops)
-    if eq.series_post:
-        out = _apply_post(out, eq.series_post)
-    return _finish_instant(out, eq)
+    return _finish(out, eq)
 
 
-def _finish_instant(out: DataFrame, eq: ExtendedQuery) -> DataFrame:
-    """Shared instant-vector tail: per-series projection or the
-    aggregation step(s), over any ``(sensor_id, name, labels, value)``
-    frame (the raw-scan path and the subquery path both end here).
-    A nested aggregation's outer level applies AFTER the inner one and
-    its wrappers (parse order: inner agg → post → outer agg →
-    outer_post)."""
-    res = _finish_instant_core(out, eq)
+def _finish(
+    out: DataFrame, eq: ExtendedQuery, t_col: F.Column | None = None
+) -> DataFrame:
+    """The shared tail over any per-series frame ``(sensor_id, name,
+    labels, value)`` — raw scans, subqueries, constant vectors and the
+    rollup-served paths all end here: label ops, element-wise functions
+    inside an aggregation, then the per-series projection or the
+    aggregation step(s), then ``post``. A nested aggregation's outer
+    level applies AFTER the inner one and its wrappers (parse order:
+    inner agg → post → outer agg → outer_post).
+
+    The step key: ``t_col`` None is an instant evaluation; otherwise
+    the frame also carries the step index ``__i`` and ``t_col`` is that
+    step's timestamp ``t`` — every aggregation then groups by it and
+    every series selection partitions by ``__i``, so it applies per
+    step."""
+    res = _finish_core(out, eq, t_col)
     if eq.outer_agg is not None:
         res = _apply_post(
             _apply_outer2(_apply_outer_agg(res, eq), eq), eq.outer_post
@@ -2323,11 +2373,17 @@ def _finish_instant(out: DataFrame, eq: ExtendedQuery) -> DataFrame:
     return res
 
 
-def _finish_instant_core(out: DataFrame, eq: ExtendedQuery) -> DataFrame:
+def _finish_core(
+    out: DataFrame, eq: ExtendedQuery, t_col: F.Column | None
+) -> DataFrame:
+    if eq.label_ops:
+        out = _apply_label_ops(out, eq.label_ops)
+    if eq.series_post:
+        out = _apply_post(out, eq.series_post)
+    step = [] if t_col is None else [t_col]
+    series = ["sensor_id", "name", "labels", *step, "value"]
     if eq.agg is None:
-        return _apply_post(
-            out.select("sensor_id", "name", "labels", "value"), eq.post
-        )
+        return _apply_post(out.select(*series), eq.post)
 
     if eq.agg == "count_values":
         # Group by the sample value itself (plus any by-labels); the
@@ -2338,7 +2394,7 @@ def _finish_instant_core(out: DataFrame, eq: ExtendedQuery) -> DataFrame:
             F.element_at(F.col("labels"), lbl).alias(lbl) for lbl in eq.by
         ]
         return _apply_post(
-            out.groupBy(*keys).agg(
+            out.groupBy(*keys, *step).agg(
                 F.count("*").cast("long").alias("value")
             ),
             eq.post,
@@ -2346,45 +2402,44 @@ def _finish_instant_core(out: DataFrame, eq: ExtendedQuery) -> DataFrame:
 
     if eq.agg in ("topk", "bottomk"):
         # Series selection, not aggregation: keep the k extreme series
-        # (per by-group when given). Input is the per-series instant
-        # vector — dimension-sized — so a driver-global window is fine.
+        # (per step, per by-group when given). The window input is
+        # series (× steps) — dimension-sized, never sample-sized — so
+        # a driver-global window is fine.
         order = (
             F.col("value").desc() if eq.agg == "topk" else F.col("value").asc()
         )
         part = [F.element_at(F.col("labels"), lbl) for lbl in eq.by]
-        w = (
-            Window.partitionBy(*part) if part else Window.partitionBy()
-        ).orderBy(order, F.col("sensor_id"))
+        if t_col is not None:
+            part = [F.col("__i")] + part
+        w = Window.partitionBy(*part).orderBy(order, F.col("sensor_id"))
         return _apply_post(
             out.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= int(eq.param))
-            .select("sensor_id", "name", "labels", "value"),
+            .select(*series),
             eq.post,
         )
 
     if eq.agg in LIMIT_AGGS:
-        picked = _limit_agg_filter(out, eq)
-        return _apply_post(
-            picked.select("sensor_id", "name", "labels", "value"), eq.post
+        # The same deterministic sampler per step (limitk windows
+        # partition on the step index too; limit_ratio is
+        # step-independent).
+        picked = _limit_agg_filter(
+            out, eq, extra_part=None if t_col is None else [F.col("__i")]
         )
-
-    if eq.agg == "quantile":
-        agg_col = F.percentile("value", F.lit(eq.param)).cast("double")
-    elif eq.agg == "group":
-        agg_col = F.max(F.lit(1.0))
-    else:
-        agg_col = _AGG_FNS[eq.agg]("value")
-        if eq.agg == "count":
-            agg_col = agg_col.cast("long")
+        return _apply_post(picked.select(*series), eq.post)
 
     if eq.without:
-        grouped = out.groupBy(_labels_without(eq.without).alias("labels"))
+        keys = [_labels_without(eq.without).alias("labels")]
     else:
         keys = [
             F.element_at(F.col("labels"), lbl).alias(lbl) for lbl in eq.by
         ]
-        grouped = out.groupBy(*keys) if keys else out.groupBy()
-    return _apply_post(grouped.agg(agg_col.alias("value")), eq.post)
+    return _apply_post(
+        out.groupBy(*keys, *step).agg(
+            _agg_column(eq.agg, eq.param).alias("value")
+        ),
+        eq.post,
+    )
 
 
 def _apply_outer_agg(out: DataFrame, eq: ExtendedQuery) -> DataFrame:
@@ -2443,18 +2498,10 @@ def _apply_outer_agg(out: DataFrame, eq: ExtendedQuery) -> DataFrame:
             .drop("__orn")
         )
 
-    if eq.outer_agg == "quantile":
-        agg_col = F.percentile("value", F.lit(eq.outer_param)).cast(
-            "double"
-        )
-    elif eq.outer_agg == "group":
-        agg_col = F.max(F.lit(1.0))
-    else:
-        agg_col = _AGG_FNS[eq.outer_agg]("value")
-        if eq.outer_agg == "count":
-            agg_col = agg_col.cast("long")
     grouped = out.groupBy(*keys, *step_keys)
-    return grouped.agg(agg_col.alias("value"))
+    return grouped.agg(
+        _agg_column(eq.outer_agg, eq.outer_param).alias("value")
+    )
 
 
 def _apply_outer2(out: DataFrame, eq: ExtendedQuery) -> DataFrame:
@@ -2466,13 +2513,9 @@ def _apply_outer2(out: DataFrame, eq: ExtendedQuery) -> DataFrame:
     if eq.outer2_agg is None:
         return out
     step_keys = [F.col("t")] if "t" in out.columns else []
-    if eq.outer2_agg == "group":
-        agg_col = F.max(F.lit(1.0))
-    else:
-        agg_col = _AGG_FNS[eq.outer2_agg]("value")
-        if eq.outer2_agg == "count":
-            agg_col = agg_col.cast("long")
-    return out.groupBy(*step_keys).agg(agg_col.alias("value"))
+    return out.groupBy(*step_keys).agg(
+        _agg_column(eq.outer2_agg).alias("value")
+    )
 
 
 def data_window(eq: ExtendedQuery) -> tuple[dt.datetime, dt.datetime]:
@@ -2532,31 +2575,47 @@ def _evaluate_absent(
     sample (no count, no full scan), and the filter/semi-join still
     push down to the value table, so at 100 TB this reads at most one
     row group of the pruned window."""
-    from sensapp_spark.operators.matchers import MatcherType
-
     q = eq.selector
-    selected = select_sensors(sensors, q.matchers)
-    scan = values.join(
-        F.broadcast(selected.select("sensor_id")), "sensor_id", "leftsemi"
+    scan, lbl_str = _absent_probe(
+        sensors, values, q, q.start_time, q.end_time
     )
-    scan = time_range(scan, q.start_time, q.end_time)
-    pairs = sorted(
-        (m.name, m.value)
-        for m in q.matchers
-        if m.name != "__name__" and m.matcher_type is MatcherType.EQUAL
-    )
-    # Escape backslash/quote in values so the emitted label set stays a
-    # well-formed k="v" list (matcher values may contain either).
-    def _esc(v: str) -> str:
-        return v.replace("\\", "\\\\").replace('"', '\\"')
-
-    lbl_str = ",".join(f'{k}="{_esc(v)}"' for k, v in pairs)
     one = sensors.sparkSession.range(1).select(
         F.lit(lbl_str).alias("labels"), F.lit(1.0).alias("value")
     )
     return _apply_post(
         one.join(scan.limit(1), F.lit(True), "left_anti"), eq.post
     )
+
+
+def _absent_probe(
+    sensors: DataFrame,
+    values: DataFrame,
+    q: ParsedQuery,
+    lo: dt.datetime,
+    hi: dt.datetime,
+) -> tuple[DataFrame, str]:
+    """The matched sample scan over ``[lo, hi]`` that an absence probe
+    looks for, and the label string of the absent vector it answers
+    with: the selector's equality matchers, metric name excluded."""
+    from sensapp_spark.operators.matchers import MatcherType
+
+    selected = select_sensors(sensors, q.matchers)
+    scan = values.join(
+        F.broadcast(selected.select("sensor_id")), "sensor_id", "leftsemi"
+    )
+    pairs = sorted(
+        (m.name, m.value)
+        for m in q.matchers
+        if m.name != "__name__" and m.matcher_type is MatcherType.EQUAL
+    )
+
+    # Escape backslash/quote in values so the emitted label set stays a
+    # well-formed k="v" list (matcher values may contain either).
+    def _esc(v: str) -> str:
+        return v.replace("\\", "\\\\").replace('"', '\\"')
+
+    lbl_str = ",".join(f'{k}="{_esc(v)}"' for k, v in pairs)
+    return time_range(scan, lo, hi), lbl_str
 
 
 def _evaluate_subquery(
@@ -2570,7 +2629,7 @@ def _evaluate_subquery(
 
     Returns ``(frame, series_shaped)``: a series-shaped inner
     (unaggregated / topk / bottomk) yields ``(sensor_id, name, labels,
-    value)`` — ready for :func:`_finish_instant` so enclosing
+    value)`` — ready for :func:`_finish` so enclosing
     aggregations compose — while an aggregated inner keeps its group
     keys. The outer aggregation groups the STEP frame (series × steps
     rows, dimension-sized): one cheap shuffle.
@@ -2880,19 +2939,9 @@ def evaluate_range(
         inst = evaluate_extended(
             sensors, values, dataclasses.replace(eq, sort=None)
         )
-        spark = sensors.sparkSession
-        s_us = int(step_seconds * 1_000_000)
-        start_us = int(
-            start.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6
-        )
-        n_steps = int(
-            (end.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6
-             - start_us) // s_us
-        )
-        steps = spark.range(n_steps + 1).select(
-            F.timestamp_micros(
-                (F.lit(start_us) + F.col("id") * s_us).cast("long")
-            ).alias("t")
+        grid = _StepGrid.of(start, end, step_seconds)
+        steps = sensors.sparkSession.range(grid.n_steps + 1).select(
+            grid.t("id")
         )
         keep = [c for c in inst.columns if c != "value"]
         return inst.crossJoin(F.broadcast(steps)).select(
@@ -2921,12 +2970,7 @@ def evaluate_range(
         off_us = max(0, int((anchor - end_t).total_seconds() * 1_000_000))
     offset = dt.timedelta(microseconds=off_us)
     r_us = int(lookback.total_seconds() * 1_000_000)
-    s_us = int(step_seconds * 1_000_000)
-    start_us = int(start.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6)
-    n_steps = int(
-        (end.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6 - start_us)
-        // s_us
-    )
+    grid = _StepGrid.of(start, end, step_seconds)
 
     # Range-path operand memo — the range analogue of the instant
     # path's series-vector sharing (see _evaluate_extended_core): the
@@ -2935,8 +2979,7 @@ def evaluate_range(
     # e.g. a range entry evaluating rate(click[2d]) both standalone and
     # as a binary operand runs the sample explode + reduction once.
     key = (
-        "range", repr(q), eq.func, repr(eq.func_param),
-        start_us, s_us, n_steps, off_us, r_us,
+        "range", repr(q), eq.func, repr(eq.func_param), *grid, off_us, r_us,
     )
     out = cache.get(key) if cache is not None else None
     if out is None:
@@ -2946,26 +2989,11 @@ def evaluate_range(
             "leftsemi",
         )
         scan = time_range(scan, start - lookback - offset, end - offset)
-
-        tau = F.unix_micros("time") + F.lit(off_us)
-        idx0 = F.greatest(
-            F.lit(0), -F.floor((tau - F.lit(start_us)) / -s_us).cast("long")
-        )  # ceil((tau-start)/S) via negated floor — stays integral
-        idx1 = F.least(
-            F.lit(n_steps),
-            F.floor(
-                (tau + F.lit(r_us) - F.lit(start_us)) / s_us
-            ).cast("long"),
+        exploded = grid.explode(
+            scan, F.unix_micros("time") + F.lit(off_us), r_us
         )
-        # sequence() counts DOWNWARD for idx0 > idx1 (a sample falling
-        # between two step windows has an empty step set) — filter
-        # before the explode.
-        exploded = scan.filter(idx0 <= idx1).withColumn(
-            "__i", F.explode(F.sequence(idx0, idx1))
-        )
-
         step_eval_us = (
-            F.lit(start_us) + F.col("__i") * F.lit(s_us)
+            F.lit(grid.start_us) + F.col("__i") * F.lit(grid.s_us)
         ).cast("long")
         per_step = _per_series_agg(
             exploded, eq, keys=("sensor_id", "__i"), eval_us=step_eval_us
@@ -2978,90 +3006,7 @@ def evaluate_range(
         if cache is not None:
             out = out.localCheckpoint(eager=False)
             cache[key] = out
-    t_col = F.timestamp_micros(
-        (F.lit(start_us) + F.col("__i") * s_us).cast("long")
-    ).alias("t")
-    return _finish_range(out, eq, t_col)
-
-
-def _finish_range(out: DataFrame, eq: ExtendedQuery, t_col) -> DataFrame:
-    """Shared range-query tail over any per-(series, step) frame
-    carrying ``(sensor_id, name, labels, __i, value)`` — the raw-scan
-    path and the range-evaluated-subquery path both end here (the
-    instant analogue is :func:`_finish_instant`). A nested
-    aggregation's outer level applies per step, after the inner."""
-    res = _finish_range_core(out, eq, t_col)
-    if eq.outer_agg is not None:
-        res = _apply_post(
-            _apply_outer2(_apply_outer_agg(res, eq), eq), eq.outer_post
-        )
-    return res
-
-
-def _finish_range_core(
-    out: DataFrame, eq: ExtendedQuery, t_col
-) -> DataFrame:
-    if eq.label_ops:
-        out = _apply_label_ops(out, eq.label_ops)
-    if eq.series_post:
-        out = _apply_post(out, eq.series_post)
-    if eq.agg is None:
-        return _apply_post(
-            out.select("sensor_id", "name", "labels", t_col, "value"),
-            eq.post,
-        )
-    if eq.agg == "count_values":
-        keys = [F.col("value").alias(eq.label_param)] + [
-            F.element_at(F.col("labels"), lbl).alias(lbl) for lbl in eq.by
-        ]
-        return _apply_post(
-            out.groupBy(*keys, t_col).agg(
-                F.count("*").cast("long").alias("value")
-            ),
-            eq.post,
-        )
-    if eq.agg in ("topk", "bottomk"):
-        # k extreme series PER STEP (and per by-group). The window input
-        # is series × steps — bounded by the step count, never by the
-        # sample count.
-        order = (
-            F.col("value").desc() if eq.agg == "topk" else F.col("value").asc()
-        )
-        part = [F.col("__i")] + [
-            F.element_at(F.col("labels"), lbl) for lbl in eq.by
-        ]
-        w = Window.partitionBy(*part).orderBy(order, F.col("sensor_id"))
-        return _apply_post(
-            out.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= int(eq.param))
-            .select("sensor_id", "name", "labels", t_col, "value"),
-            eq.post,
-        )
-    if eq.agg in LIMIT_AGGS:
-        # Same deterministic sampler PER STEP (limitk windows partition
-        # on the step index too; limit_ratio is step-independent).
-        picked = _limit_agg_filter(out, eq, extra_part=[F.col("__i")])
-        return _apply_post(
-            picked.select("sensor_id", "name", "labels", t_col, "value"),
-            eq.post,
-        )
-    if eq.agg == "quantile":
-        agg_col = F.percentile("value", F.lit(eq.param)).cast("double")
-    elif eq.agg == "group":
-        agg_col = F.max(F.lit(1.0))
-    else:
-        agg_col = _AGG_FNS[eq.agg]("value")
-        if eq.agg == "count":
-            agg_col = agg_col.cast("long")
-    if eq.without:
-        keys = [_labels_without(eq.without).alias("labels")]
-    else:
-        keys = [
-            F.element_at(F.col("labels"), lbl).alias(lbl) for lbl in eq.by
-        ]
-    return _apply_post(
-        out.groupBy(*keys, t_col).agg(agg_col.alias("value")), eq.post
-    )
+    return _finish(out, eq, grid.t())
 
 
 def _evaluate_range_absent(
@@ -3083,55 +3028,25 @@ def _evaluate_range_absent(
     anti-joins against that — sample-grain data never crosses the
     anti-join, so the cost is the pruned scan plus two tiny-frame
     operations."""
-    from sensapp_spark.operators.matchers import MatcherType
-
     q = eq.selector
     lookback = q.end_time - q.start_time
-    r_us = int(lookback.total_seconds() * 1_000_000)
-    s_us = int(step_seconds * 1_000_000)
-    start_us = int(start.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6)
-    n_steps = int(
-        (end.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6 - start_us)
-        // s_us
-    )
-    selected = select_sensors(sensors, q.matchers)
-    scan = values.join(
-        F.broadcast(selected.select("sensor_id")), "sensor_id", "leftsemi"
-    )
-    scan = time_range(scan, start - lookback, end)
-    tau = F.unix_micros("time")
-    idx0 = F.greatest(
-        F.lit(0), -F.floor((tau - F.lit(start_us)) / -s_us).cast("long")
-    )
-    idx1 = F.least(
-        F.lit(n_steps),
-        F.floor((tau + F.lit(r_us) - F.lit(start_us)) / s_us).cast("long"),
-    )
+    grid = _StepGrid.of(start, end, step_seconds)
+    scan, lbl_str = _absent_probe(sensors, values, q, start - lookback, end)
     present = (
-        scan.filter(idx0 <= idx1)
-        .withColumn("__i", F.explode(F.sequence(idx0, idx1)))
+        grid.explode(
+            scan, F.unix_micros("time"),
+            int(lookback.total_seconds() * 1_000_000),
+        )
         .select("__i")
         .distinct()
     )
     spark = sensors.sparkSession
-    steps = spark.range(n_steps + 1).select(F.col("id").alias("__i"))
+    steps = spark.range(grid.n_steps + 1).select(F.col("id").alias("__i"))
     missing = steps.join(present, "__i", "left_anti")
-    pairs = sorted(
-        (m.name, m.value)
-        for m in q.matchers
-        if m.name != "__name__" and m.matcher_type is MatcherType.EQUAL
-    )
-
-    def _esc(v: str) -> str:
-        return v.replace("\\", "\\\\").replace('"', '\\"')
-
-    lbl_str = ",".join(f'{k}="{_esc(v)}"' for k, v in pairs)
-    t_col = F.timestamp_micros(
-        (F.lit(start_us) + F.col("__i") * s_us).cast("long")
-    ).alias("t")
     return _apply_post(
         missing.select(
-            F.lit(lbl_str).alias("labels"), t_col, F.lit(1.0).alias("value")
+            F.lit(lbl_str).alias("labels"), grid.t(),
+            F.lit(1.0).alias("value"),
         ),
         eq.post,
     )
@@ -3196,13 +3111,9 @@ def _evaluate_range_histogram(
         # Ungrouped outer aggregation over the quantile vector, PER
         # STEP (max(histogram_quantile(…))) — grouped outer
         # aggregation is parse-rejected, as on the instant path.
-        if eq.agg == "quantile":
-            agg_col = F.percentile("value", F.lit(eq.param)).cast("double")
-        else:
-            agg_col = _AGG_FNS[eq.agg]("value")
-            if eq.agg == "count":
-                agg_col = agg_col.cast("long")
-        hq = hq.groupBy("t").agg(agg_col.alias("value"))
+        hq = hq.groupBy("t").agg(
+            _agg_column(eq.agg, eq.param).alias("value")
+        )
     return _apply_post(hq, eq.post)
 
 
@@ -3242,26 +3153,8 @@ def _evaluate_range_subquery(
     )
     series_shaped = "sensor_id" in steps.columns
     tau = F.unix_micros("t")
-    s_us = int(step_seconds * 1_000_000)
-    r_us = int(eq.sub_range_s * 1_000_000)
-    start_us = int(start.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6)
-    n_steps = int(
-        (end.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6 - start_us)
-        // s_us
-    )
-    idx0 = F.greatest(
-        F.lit(0), -F.floor((tau - F.lit(start_us)) / -s_us).cast("long")
-    )
-    idx1 = F.least(
-        F.lit(n_steps),
-        F.floor((tau + F.lit(r_us) - F.lit(start_us)) / s_us).cast("long"),
-    )
-    exploded = steps.filter(idx0 <= idx1).withColumn(
-        "__i", F.explode(F.sequence(idx0, idx1))
-    )
-    t_col = F.timestamp_micros(
-        (F.lit(start_us) + F.col("__i") * s_us).cast("long")
-    ).alias("t")
+    grid = _StepGrid.of(start, end, step_seconds)
+    exploded = grid.explode(steps, tau, int(eq.sub_range_s * 1_000_000))
     if series_shaped:
         group = ["sensor_id", "__i"]
         carry = [
@@ -3269,13 +3162,13 @@ def _evaluate_range_subquery(
             F.first("labels").alias("labels"),
         ]
         out = _outer_step_agg(exploded, eq, group, carry, tau)
-        return _finish_range(out, eq, t_col)
+        return _finish(out, eq, grid.t())
     # Aggregated-inner subquery: the group keys ride along; the
     # (parse-rejected) enclosing aggregation never applies.
     group = [c for c in steps.columns if c not in ("t", "value")] + ["__i"]
     out = _outer_step_agg(exploded, eq, group, [], tau)
     keys = [c for c in out.columns if c not in ("value", "__i")]
-    return _apply_post(out.select(*keys, t_col, "value"), eq.post)
+    return _apply_post(out.select(*keys, grid.t(), "value"), eq.post)
 
 
 def _pdiv(lc: F.Column, rc: F.Column) -> F.Column:
@@ -3319,268 +3212,42 @@ def _matching_key(on: list[str], ignoring: list[str]) -> F.Column:
     return _labels_without(ignoring)
 
 
+# The binary operator table, PromQL semantics over double columns.
+# Spark's % on doubles is Java fmod — truncated toward zero, sign of the
+# dividend, same as Go math.Mod (Prometheus % semantics); _pdiv/_pmod
+# add the IEEE zero-divisor cases ANSI mode would otherwise throw on
+# (one zero-valued series would abort the whole query).
+_BINARY_OPS = {
+    "+": lambda lc, rc: lc + rc,
+    "-": lambda lc, rc: lc - rc,
+    "*": lambda lc, rc: lc * rc,
+    "/": _pdiv,
+    "%": _pmod,
+    "^": F.pow,
+    "atan2": F.atan2,
+    ">": lambda lc, rc: lc > rc,
+    "<": lambda lc, rc: lc < rc,
+    ">=": lambda lc, rc: lc >= rc,
+    "<=": lambda lc, rc: lc <= rc,
+    "==": lambda lc, rc: lc == rc,
+    "!=": lambda lc, rc: lc != rc,
+}
+
+
 def evaluate_binary(
     sensors: DataFrame,
     values: DataFrame,
     bq: BinaryQuery,
     cache: dict | None = None,
 ) -> DataFrame:
-    """Evaluate one arithmetic operation between two instant vectors
-    with one-to-one matching, or between a vector and a scalar.
-
-    Vector∘vector arithmetic returns ``(labels, value)`` keyed on the
-    matching label string (the metric name is dropped, as in
-    Prometheus); vector∘scalar and the set operations keep the series
-    shape ``(sensor_id, name, labels, value)``. Both operand vectors
-    are series-sized (post per-series aggregation), so the equality
-    join is dimension-sized — AQE is free to broadcast it. Many-to-one
-    matches (duplicate keys on a side) multiply rows; Prometheus
-    rejects them at runtime, here they are documented as undefined
-    instead of paying a duplicate check.
-
-    Comparisons follow Prometheus: without ``bool`` they FILTER the
-    left vector (value unchanged); with ``bool`` every series survives
-    with value 1.0/0.0. Set operations (``and``/``unless``/``or``)
-    become left-semi / left-anti joins / a union with an anti-join on
-    the matching key — no value columns cross sides, so all three stay
-    dimension-sized joins."""
-    # Operands must evaluate to label-map series vectors (or scalars):
-    # a histogram_quantile result keys on a canonical label STRING and
-    # an aggregated-inner subquery keeps its group columns — either
-    # would crash the matching-key expression with an opaque
-    # AnalysisException, so reject them didactically up front (this
-    # covers the set-op, scalar, group, and one-to-one paths alike).
-    for side_eq in (bq.left, bq.right):
-        if isinstance(side_eq, float):
-            continue
-        if isinstance(side_eq, ScalarOf):
-            # The reduction to one value is shape-agnostic (row count +
-            # first value), so any inner that parses is evaluable;
-            # parse-time checks (no absent, no sort) already ran.
-            continue
-        if isinstance(side_eq, BinaryQuery):
-            # A nested binary operand (round 11) re-enters this
-            # function — its own operands were checked by its own
-            # recursion.
-            continue
-        if _is_hist(side_eq):
-            raise PromQLError(
-                "binary",
-                "histogram-function operands in binary operations "
-                "are not supported; compute them separately.",
-            )
-        if side_eq.func in ABSENT_FUNCS:
-            raise PromQLError(
-                "binary",
-                f"{side_eq.func}() operands in binary operations are "
-                "not supported; alert on the absent vector directly.",
-            )
-        if side_eq.outer_agg is not None or (
-            side_eq.sub_inner is not None
-            and side_eq.sub_inner.outer_agg is not None
-        ):
-            # A nested aggregation's result keys on the OUTER group
-            # columns, not a label map — the matching-key expression
-            # would crash opaquely. The same applies wrapped in a
-            # subquery: avg_over_time(sum(topk(2, m))[10m:5m]) loses
-            # the series shape even though sub_inner.agg ('topk')
-            # alone would pass the allowlist below (round-8 review).
-            raise PromQLError(
-                "binary",
-                "Nested-aggregation operands in binary operations are "
-                "not supported; compute the sides separately.",
-            )
-        if side_eq.sub_inner is not None and side_eq.sub_inner.agg not in (
-            None,
-            "topk",
-            "bottomk",
-        ):
-            # topk/bottomk inners stay series-shaped (see
-            # _evaluate_subquery) — only true aggregations lose the
-            # label map.
-            raise PromQLError(
-                "binary",
-                "Aggregated-inner subquery operands in binary "
-                "operations are not supported; use a series-shaped "
-                "subquery or aggregate the result.",
-            )
-
-    def apply(lc: F.Column, rc: F.Column) -> F.Column:
-        return {
-            "+": lc + rc,
-            "-": lc - rc,
-            "*": lc * rc,
-            "/": _pdiv(lc, rc),
-            # Spark's % on doubles is Java fmod — truncated toward
-            # zero, sign of the dividend, same as Go math.Mod
-            # (Prometheus % semantics); _pdiv/_pmod add the IEEE
-            # zero-divisor cases ANSI mode would otherwise throw on.
-            "%": _pmod(lc, rc),
-            "^": F.pow(lc, rc),
-            "atan2": F.atan2(lc, rc),
-            ">": lc > rc,
-            "<": lc < rc,
-            ">=": lc >= rc,
-            "<=": lc <= rc,
-            "==": lc == rc,
-            "!=": lc != rc,
-        }[bq.op]
-
-    def _operand_frame(side) -> DataFrame:
-        """Evaluate one vector operand — an ExtendedQuery (series
-        shape: map labels) or a nested BinaryQuery (one-to-one
-        arithmetic results carry a CANONICAL LABEL STRING instead)."""
-        if isinstance(side, BinaryQuery):
-            return evaluate_binary(sensors, values, side, cache)
-        return evaluate_extended(sensors, values, side, cache)
-
-    def _key_for(frame: DataFrame) -> F.Column:
-        """The matching key for one operand frame. A string-labeled
-        frame (nested arithmetic result) IS its full-label canonical
-        key; a label-LESS frame (a global aggregation like ``sum(a)``
-        — one row, Prometheus' empty label set) keys on the empty
-        string. on/ignoring cannot re-address labels inside either
-        shape, so explicit matching over them is didactic."""
-        kind = dict(frame.dtypes).get("labels")
-        if kind == "string" or kind is None:
-            if bq.on or bq.ignoring:
-                raise PromQLError(
-                    "binary",
-                    "on/ignoring over a parenthesized-binary or "
-                    "globally-aggregated operand is not supported — "
-                    "its result keys on its full (possibly empty) "
-                    "label set; put the matching clause inside the "
-                    "parentheses instead.",
-                )
-            return F.col("labels") if kind else F.lit("")
-        return _matching_key(bq.on, bq.ignoring)
-
-    if bq.op in _SET_OPS:
-        for side_eq in (bq.left, bq.right):
-            if not isinstance(side_eq, BinaryQuery) and (
-                side_eq.agg is not None
-            ):
-                raise PromQLError(
-                    "binary",
-                    f"'{bq.op}' operates on series vectors; aggregated "
-                    "operands have no series identity to match on.",
-                )
-        left = _operand_frame(bq.left)
-        right = _operand_frame(bq.right)
-        lkey, rkey = _key_for(left), _key_for(right)
-        lk = left.withColumn("__k", lkey)
-        rk = right.select(rkey.alias("__k")).distinct()
-        cols = [
-            c for c in ("sensor_id", "name", "labels", "value")
-            if c in left.columns
-        ]
-        if bq.op == "and":
-            return lk.join(rk, "__k", "leftsemi").select(*cols)
-        if bq.op == "unless":
-            return lk.join(rk, "__k", "leftanti").select(*cols)
-        # or: all left series, plus right series whose key matches no
-        # left series. Mixed shapes (one side a string-labeled nested
-        # result) canonicalize BOTH sides to (labels, value) so the
-        # union is well-typed.
-        mixed = dict(left.dtypes).get("labels") != dict(
-            right.dtypes
-        ).get("labels")
-        if mixed:
-            left = left.select(lkey.alias("labels"), "value")
-            right = right.select(rkey.alias("labels"), "value")
-            lkey = rkey = F.col("labels")
-            cols = ["labels", "value"]
-        rcols = [c for c in cols if c in right.columns]
-        lkeys = left.select(lkey.alias("__k")).distinct()
-        extra = (
-            right.withColumn("__k", rkey)
-            .join(lkeys, "__k", "leftanti")
-            .select(*rcols)
-        )
-        return left.select(*cols).unionByName(extra)
-
-    if isinstance(bq.left, (float, ScalarOf)) or isinstance(
-        bq.right, (float, ScalarOf)
-    ):
-        scalar_left = isinstance(bq.left, (float, ScalarOf))
-        eq = bq.right if scalar_left else bq.left
-        sc = bq.left if scalar_left else bq.right
-        out = _operand_frame(eq)
-        if isinstance(sc, ScalarOf):
-            # scalar(v): ONE value — the single series' value, or NaN
-            # unless exactly one series (Prometheus). The reduction is
-            # a global aggregate of a series-sized frame; the 1-row
-            # result broadcasts onto the vector side (the same
-            # broadcast-literal nested-loop shape as the engine's other
-            # one-row scalars — bounded by construction).
-            reduced = evaluate_extended(sensors, values, sc.eq, cache).agg(
-                F.count("*").alias("__n"),
-                F.first("value").alias("__v"),
-            ).select(
-                F.when(F.col("__n") == 1, F.col("__v"))
-                .otherwise(F.lit(float("nan")))
-                .alias("__sv")
-            )
-            out = out.crossJoin(F.broadcast(reduced))
-            sc_col = F.col("__sv")
-        else:
-            sc_col = F.lit(sc)
-        if scalar_left:
-            res = apply(sc_col, F.col("value"))
-        else:
-            res = apply(F.col("value"), sc_col)
-        cols = [c for c in ("sensor_id", "name", "labels") if c in out.columns]
-        if bq.op in _CMP_OPS:
-            if bq.bool_mode:
-                return out.select(
-                    *cols, res.cast("double").alias("value")
-                )
-            return out.filter(res).select(*cols, "value")
-        return out.select(*cols, res.alias("value"))
-
-    if bq.group_mode is not None:
-        return _evaluate_group_binary(sensors, values, bq, apply, cache)
-
-    for side_eq in (bq.left, bq.right):
-        if (
-            not isinstance(side_eq, BinaryQuery)
-            and side_eq.agg not in (None, "topk", "bottomk")
-            # A GLOBAL reduction (no by/without — round 11) is
-            # Prometheus' one-row empty-label vector: sum(a) / sum(b)
-            # joins on the empty key, the dashboard ratio shape.
-            # count_values is excluded: its rows differ only in the
-            # value-label column, which the empty key cannot see.
-            and (side_eq.by or side_eq.without
-                 or side_eq.agg == "count_values")
-        ):
-            raise PromQLError(
-                "binary",
-                "by/without-grouped operands in vector-to-vector "
-                "binary operations are not supported (their result "
-                "keys on group columns, not a label set); use "
-                "'on (…)' with group_left/group_right, or aggregate "
-                "the result instead.",
-            )
-    left = _operand_frame(bq.left)
-    right = _operand_frame(bq.right)
-    lk = left.select(
-        _key_for(left).alias("labels"), F.col("value").alias("__lv")
-    )
-    rk = right.select(
-        _key_for(right).alias("labels"), F.col("value").alias("__rv")
-    )
-    joined = lk.join(rk, "labels")
-    if bq.op in _CMP_OPS:
-        cond = apply(F.col("__lv"), F.col("__rv"))
-        if bq.bool_mode:
-            return joined.select(
-                "labels", cond.cast("double").alias("value")
-            )
-        return joined.filter(cond).select(
-            "labels", F.col("__lv").alias("value")
-        )
-    return joined.select(
-        "labels", apply(F.col("__lv"), F.col("__rv")).alias("value")
+    """Evaluate one binary operation between two instant vectors, or
+    between a vector and a scalar (semantics and output shapes:
+    :func:`_binary`). Both operand vectors are series-sized (post
+    per-series aggregation), so every join is dimension-sized — AQE is
+    free to broadcast it. ``cache`` is the operand memo of
+    :func:`evaluate_extended`."""
+    return _binary(
+        bq, lambda eq: evaluate_extended(sensors, values, eq, cache), []
     )
 
 
@@ -3597,21 +3264,18 @@ def evaluate_range_binary(
 ) -> DataFrame:
     """Range-query binary operations (round 11) — the Grafana ratio
     panel: evaluate both operands at every step, then apply the
-    operation PER STEP (one-to-one matching joins on (key, t); scalar
-    operands broadcast; ``scalar(expr)`` reduces per step).
+    operation PER STEP — :func:`_binary` with the step key ``t``, so
+    every operand shape and rule of :func:`evaluate_binary` holds per
+    step (one-to-one and group_left/group_right matching join on
+    (key, t); ``scalar(expr)`` reduces per step; ``time()`` is each
+    step's own timestamp).
 
     ``side_eval(eq) -> DataFrame`` evaluates one vector operand to its
     per-step frame — the HTTP route passes a callback that serves a
     grain-compatible side from the MAINTAINED rollup
     (query/rollup_serve.py) and falls back to the raw
     ``evaluate_range``; the default evaluates raw against ``values``.
-    Each operand therefore picks its own fastest exact path.
-
-    Supported operand shapes mirror the instant path: plain series
-    vectors, global aggregations (empty-label one-row-per-step),
-    topk/bottomk samplers, scalars, ONE nested BinaryQuery, and
-    group_left/group_right many-to-one matching (the info-metric
-    ratio panel) joined per (match key, t)."""
+    Each operand therefore picks its own fastest exact path."""
     if side_eval is None:
         def side_eval(eq):
             return evaluate_range(
@@ -3620,249 +3284,283 @@ def evaluate_range_binary(
                 now=now, cache=cache,
             )
 
-    for side_eq in (bq.left, bq.right):
-        if isinstance(side_eq, (float, ScalarOf, BinaryQuery)):
-            continue
-        if _is_hist(side_eq) or side_eq.func in ABSENT_FUNCS:
-            raise PromQLError(
-                "binary",
-                "histogram/absent operands in range binary operations "
-                "are not supported; compute them separately.",
-            )
-        if side_eq.outer_agg is not None:
-            raise PromQLError(
-                "binary",
-                "Nested-aggregation operands in binary operations are "
-                "not supported; compute the sides separately.",
-            )
-        if bq.group_mode is None and side_eq.agg not in (
-            None, "topk", "bottomk"
-        ) and (
-            side_eq.by or side_eq.without
-            or side_eq.agg == "count_values"
-        ):
-            # (group_mode's aggregated-one-side legality is checked by
-            # _validate_group_shapes in its own branch below.)
-            raise PromQLError(
-                "binary",
-                "by/without-grouped operands in vector-to-vector "
-                "binary operations are not supported (their result "
-                "keys on group columns, not a label set).",
-            )
-
-    def _frame(side) -> DataFrame:
-        if isinstance(side, BinaryQuery):
-            return evaluate_range_binary(
-                sensors, values, side, start, end, step_seconds,
-                now=now, side_eval=side_eval, cache=cache,
-            )
-        if getattr(side, "const", None) is not None:
+    def operand(eq: ExtendedQuery) -> DataFrame:
+        if eq.const is not None:
             # Constant-vector operand ('x or vector(0)'): evaluated
             # here, never through side_eval — the callback's lake
             # scan-window arithmetic has no selector to read (the
             # route used to 500 on exactly this shape), and the
             # constant needs no scan at all.
             return _const_range_vector(
-                sensors.sparkSession, side, start, end, step_seconds
+                sensors.sparkSession, eq, start, end, step_seconds
             )
-        return side_eval(side)
+        return side_eval(eq)
 
-    def _key(frame: DataFrame) -> F.Column:
-        kind = dict(frame.dtypes).get("labels")
+    return _binary(bq, operand, ["t"])
+
+
+def _check_operands(bq: BinaryQuery) -> None:
+    """Operand shapes a binary operation accepts, one rule set for
+    instant and range evaluation. Vector operands must evaluate to
+    label-map series vectors: a histogram function result keys on a
+    canonical label STRING and an aggregated-inner subquery keeps its
+    group columns — either would crash the matching-key expression
+    with an opaque AnalysisException (or, per step, match nothing and
+    answer empty), so they are rejected didactically up front, for the
+    set-op, scalar, group and one-to-one paths alike. Scalars and
+    ``scalar(expr)`` need no shape (the reduction to one value is
+    shape-agnostic; parse-time checks — no absent, no sort — already
+    ran); a nested BinaryQuery operand (round 11) is checked when
+    :func:`_binary` recurses into it."""
+    for side in (bq.left, bq.right):
+        if not isinstance(side, ExtendedQuery):
+            continue
+        if _is_hist(side):
+            raise PromQLError(
+                "binary",
+                "histogram-function operands in binary operations "
+                "are not supported; compute them separately.",
+            )
+        if side.func in ABSENT_FUNCS:
+            raise PromQLError(
+                "binary",
+                f"{side.func}() operands in binary operations are "
+                "not supported; alert on the absent vector directly.",
+            )
+        if side.outer_agg is not None or (
+            side.sub_inner is not None
+            and side.sub_inner.outer_agg is not None
+        ):
+            # A nested aggregation's result keys on the OUTER group
+            # columns, not a label map — the matching-key expression
+            # would crash opaquely. The same applies wrapped in a
+            # subquery: avg_over_time(sum(topk(2, m))[10m:5m]) loses
+            # the series shape even though sub_inner.agg ('topk')
+            # alone would pass the allowlist below (round-8 review).
+            raise PromQLError(
+                "binary",
+                "Nested-aggregation operands in binary operations are "
+                "not supported; compute the sides separately.",
+            )
+        if side.sub_inner is not None and side.sub_inner.agg not in (
+            None,
+            "topk",
+            "bottomk",
+        ):
+            # topk/bottomk inners stay series-shaped (see
+            # _evaluate_subquery) — only true aggregations lose the
+            # label map.
+            raise PromQLError(
+                "binary",
+                "Aggregated-inner subquery operands in binary "
+                "operations are not supported; use a series-shaped "
+                "subquery or aggregate the result.",
+            )
+
+
+def _binary(bq: BinaryQuery, operand, step: list[str]) -> DataFrame:
+    """The binary operators, written once for both evaluation modes.
+    ``step`` is the step key — ``[]`` for an instant evaluation,
+    ``["t"]`` for a range one, whose operand frames carry ``t`` and
+    are matched, reduced and joined per step. ``operand(eq)``
+    evaluates one vector operand (an ExtendedQuery) to its frame; a
+    nested BinaryQuery operand recurses here with the same callback.
+
+    Vector∘vector arithmetic uses one-to-one matching and returns
+    ``(labels, *step, value)`` keyed on the matching label string (the
+    metric name is dropped, as in Prometheus). Vector∘scalar keeps
+    every column of the vector operand — the series shape ``(sensor_id,
+    name, labels)`` or an aggregation's group keys — and the set
+    operations keep the left operand's series shape. Many-to-one
+    matches (duplicate keys on a side) multiply rows; Prometheus
+    rejects them at runtime, here they are documented as undefined
+    instead of paying a duplicate check (group_left/group_right do
+    check, see :func:`_group_join`).
+
+    Comparisons follow Prometheus: without ``bool`` they FILTER the
+    left vector (value unchanged); with ``bool`` every series survives
+    with value 1.0/0.0. Set operations (``and``/``unless``/``or``)
+    become left-semi / left-anti joins / a union with an anti-join on
+    the matching key — no value columns cross sides, so all three stay
+    dimension-sized joins."""
+    _check_operands(bq)
+
+    def frame(side) -> DataFrame:
+        """One vector operand — an ExtendedQuery (series shape: map
+        labels) or a nested BinaryQuery (one-to-one arithmetic results
+        carry a CANONICAL LABEL STRING instead)."""
+        if isinstance(side, BinaryQuery):
+            return _binary(side, operand, step)
+        return operand(side)
+
+    def key_for(f: DataFrame) -> F.Column:
+        """The matching key for one operand frame. A string-labeled
+        frame (nested arithmetic result) IS its full-label canonical
+        key; a label-LESS frame (a global aggregation like ``sum(a)``
+        — one row per step, Prometheus' empty label set) keys on the
+        empty string. on/ignoring cannot re-address labels inside
+        either shape, so explicit matching over them is didactic."""
+        kind = dict(f.dtypes).get("labels")
         if kind == "string" or kind is None:
             if bq.on or bq.ignoring:
                 raise PromQLError(
                     "binary",
                     "on/ignoring over a parenthesized-binary or "
                     "globally-aggregated operand is not supported — "
-                    "put the matching clause inside the parentheses.",
+                    "its result keys on its full (possibly empty) "
+                    "label set; put the matching clause inside the "
+                    "parentheses instead.",
                 )
             return F.col("labels") if kind else F.lit("")
         return _matching_key(bq.on, bq.ignoring)
 
-    def apply(lc: F.Column, rc: F.Column) -> F.Column:
-        # IEEE division/modulo via _pdiv/_pmod — see the instant
-        # path's apply; ANSI throwing on one zero-valued series would
-        # abort the whole range query.
-        return {
-            "+": lc + rc, "-": lc - rc, "*": lc * rc,
-            "/": _pdiv(lc, rc),
-            "%": _pmod(lc, rc), "^": F.pow(lc, rc),
-            "atan2": F.atan2(lc, rc),
-            ">": lc > rc, "<": lc < rc, ">=": lc >= rc,
-            "<=": lc <= rc, "==": lc == rc, "!=": lc != rc,
-        }[bq.op]
-
-    if bq.group_mode is not None:
-        # group_left/group_right PER STEP (round 11 session 2 — the
-        # info-metric ratio panel): the same many-to-one join body as
-        # the instant path, keyed (match key, t); the duplicate-one-
-        # side guard partitions per (key, step).
-        one_aggregated = _validate_group_shapes(bq)
-        many_eq = bq.left if bq.group_mode == "left" else bq.right
-        one_eq = bq.right if bq.group_mode == "left" else bq.left
-        return _group_join(
-            _frame(many_eq), _frame(one_eq), bq, apply,
-            one_aggregated, with_t=True,
-        )
-
     if bq.op in _SET_OPS:
-        for side_eq in (bq.left, bq.right):
-            if isinstance(side_eq, (float, ScalarOf)):
+        for side in (bq.left, bq.right):
+            if isinstance(side, (float, ScalarOf)):
                 raise PromQLError(
                     "binary",
                     f"'{bq.op}' is a set operation between two instant "
                     "vectors; scalars have no label sets to match on.",
                 )
-            # Same guard as the instant path (evaluate_binary): an
-            # aggregated operand has no series identity to match on —
-            # without this, 'sum(a) and sum(b)' was a 400 as an
-            # instant query yet evaluated as a range query.
-            if not isinstance(side_eq, BinaryQuery) and (
-                side_eq.agg is not None
-            ):
+            if isinstance(side, ExtendedQuery) and side.agg is not None:
                 raise PromQLError(
                     "binary",
                     f"'{bq.op}' operates on series vectors; aggregated "
                     "operands have no series identity to match on.",
                 )
-        left, right = _frame(bq.left), _frame(bq.right)
-        lk = left.withColumn("__k", _key(left))
-        rk = right.select(_key(right).alias("__k"), "t").distinct()
+        left, right = frame(bq.left), frame(bq.right)
+        lkey, rkey = key_for(left), key_for(right)
+        lk = left.withColumn("__k", lkey)
+        rk = right.select(rkey.alias("__k"), *step).distinct()
         cols = [
-            c for c in ("sensor_id", "name", "labels", "t", "value")
+            c for c in ("sensor_id", "name", "labels", *step, "value")
             if c in left.columns
         ]
         if bq.op == "and":
-            return lk.join(rk, ["__k", "t"], "leftsemi").select(*cols)
+            return lk.join(rk, ["__k", *step], "leftsemi").select(*cols)
         if bq.op == "unless":
-            return lk.join(rk, ["__k", "t"], "leftanti").select(*cols)
+            return lk.join(rk, ["__k", *step], "leftanti").select(*cols)
+        # or: all left series, plus right series whose key matches no
+        # left series. Mixed shapes (one side a string-labeled nested
+        # result) canonicalize BOTH sides to (labels, value) so the
+        # union is well-typed.
         mixed = dict(left.dtypes).get("labels") != dict(
             right.dtypes
         ).get("labels")
-        lkey, rkey = _key(left), _key(right)
         if mixed:
-            left = left.select(lkey.alias("labels"), "t", "value")
-            right = right.select(rkey.alias("labels"), "t", "value")
+            left = left.select(lkey.alias("labels"), *step, "value")
+            right = right.select(rkey.alias("labels"), *step, "value")
             lkey = rkey = F.col("labels")
-            cols = ["labels", "t", "value"]
+            cols = ["labels", *step, "value"]
         rcols = [c for c in cols if c in right.columns]
-        lkeys = left.select(lkey.alias("__k"), "t").distinct()
+        lkeys = left.select(lkey.alias("__k"), *step).distinct()
         extra = (
             right.withColumn("__k", rkey)
-            .join(lkeys, ["__k", "t"], "leftanti")
+            .join(lkeys, ["__k", *step], "leftanti")
             .select(*rcols)
         )
         return left.select(*cols).unionByName(extra)
 
+    apply = _BINARY_OPS[bq.op]
     if isinstance(bq.left, (float, ScalarOf)) or isinstance(
         bq.right, (float, ScalarOf)
     ):
         scalar_left = isinstance(bq.left, (float, ScalarOf))
-        eq = bq.right if scalar_left else bq.left
+        vec = bq.right if scalar_left else bq.left
         sc = bq.left if scalar_left else bq.right
-        out = _frame(eq)
+        out = frame(vec)
+        cols = [c for c in out.columns if c != "value"]
         if isinstance(sc, ScalarOf):
-            # scalar(v) PER STEP: the inner vector reduces to one value
-            # per t (NaN unless exactly one series at that step) and
-            # joins back on t — step-count-sized, broadcastable.
+            # scalar(v): ONE value per step — the single series'
+            # value, or NaN unless exactly one series (Prometheus). The
+            # reduction is a global aggregate of a series-sized frame;
+            # the one-row-per-step result broadcasts onto the vector
+            # side (the same broadcast-literal nested-loop shape as the
+            # engine's other one-row scalars — bounded by construction).
             reduced = (
-                _frame(sc.eq)
-                .groupBy("t")
+                frame(sc.eq)
+                .groupBy(*step)
                 .agg(
                     F.count("*").alias("__n"),
                     F.first("value").alias("__v"),
                 )
                 .select(
-                    "t",
+                    *step,
                     F.when(F.col("__n") == 1, F.col("__v"))
                     .otherwise(F.lit(float("nan")))
                     .alias("__sv"),
                 )
             )
-            out = out.join(F.broadcast(reduced), "t")
+            out = (
+                out.join(F.broadcast(reduced), step)
+                if step
+                else out.crossJoin(F.broadcast(reduced))
+            )
             sc_col = F.col("__sv")
-        elif isinstance(sc, TimeScalar):
+        elif isinstance(sc, TimeScalar) and step:
             # time() PER STEP: the step grid's own timestamp, never
             # the parse-time anchor repeated (Prometheus evaluates
             # time() at each step).
             sc_col = F.unix_micros(F.col("t")) / F.lit(1e6)
         else:
             sc_col = F.lit(sc)
-        res = (
-            apply(sc_col, F.col("value"))
-            if scalar_left
-            else apply(F.col("value"), sc_col)
-        )
-        cols = [
-            c for c in ("sensor_id", "name", "labels")
-            if c in out.columns
-        ]
+        if scalar_left:
+            res = apply(sc_col, F.col("value"))
+        else:
+            res = apply(F.col("value"), sc_col)
         if bq.op in _CMP_OPS:
             if bq.bool_mode:
-                return out.select(
-                    *cols, "t", res.cast("double").alias("value")
-                )
-            return out.filter(res).select(*cols, "t", "value")
-        return out.select(*cols, "t", res.alias("value"))
+                return out.select(*cols, res.cast("double").alias("value"))
+            return out.filter(res).select(*cols, "value")
+        return out.select(*cols, res.alias("value"))
 
-    left, right = _frame(bq.left), _frame(bq.right)
+    if bq.group_mode is not None:
+        one_aggregated = _validate_group_shapes(bq)
+        many_eq = bq.left if bq.group_mode == "left" else bq.right
+        one_eq = bq.right if bq.group_mode == "left" else bq.left
+        return _group_join(
+            frame(many_eq), frame(one_eq), bq, one_aggregated, step
+        )
+
+    for side in (bq.left, bq.right):
+        if (
+            isinstance(side, ExtendedQuery)
+            and side.agg not in (None, "topk", "bottomk")
+            # A GLOBAL reduction (no by/without — round 11) is
+            # Prometheus' one-row empty-label vector: sum(a) / sum(b)
+            # joins on the empty key, the dashboard ratio shape.
+            # count_values is excluded: its rows differ only in the
+            # value-label column, which the empty key cannot see.
+            and (side.by or side.without or side.agg == "count_values")
+        ):
+            raise PromQLError(
+                "binary",
+                "by/without-grouped operands in vector-to-vector "
+                "binary operations are not supported (their result "
+                "keys on group columns, not a label set); use "
+                "'on (…)' with group_left/group_right, or aggregate "
+                "the result instead.",
+            )
+    left, right = frame(bq.left), frame(bq.right)
     lk = left.select(
-        _key(left).alias("labels"), "t", F.col("value").alias("__lv")
+        key_for(left).alias("labels"), *step, F.col("value").alias("__lv")
     )
     rk = right.select(
-        _key(right).alias("labels"), "t", F.col("value").alias("__rv")
+        key_for(right).alias("labels"), *step, F.col("value").alias("__rv")
     )
-    joined = lk.join(rk, ["labels", "t"])
+    joined = lk.join(rk, ["labels", *step])
     if bq.op in _CMP_OPS:
         cond = apply(F.col("__lv"), F.col("__rv"))
         if bq.bool_mode:
             return joined.select(
-                "labels", "t", cond.cast("double").alias("value")
+                "labels", *step, cond.cast("double").alias("value")
             )
         return joined.filter(cond).select(
-            "labels", "t", F.col("__lv").alias("value")
+            "labels", *step, F.col("__lv").alias("value")
         )
     return joined.select(
-        "labels", "t", apply(F.col("__lv"), F.col("__rv")).alias("value")
+        "labels", *step, apply(F.col("__lv"), F.col("__rv")).alias("value")
     )
-
-
-def _evaluate_group_binary(
-    sensors: DataFrame,
-    values: DataFrame,
-    bq: BinaryQuery,
-    apply,
-    cache: dict | None = None,
-) -> DataFrame:
-    """Many-to-one vector matching (``group_left``/``group_right``) —
-    the real-dashboard join the one-to-one path can't express: each
-    "many"-side series joins its match group's single "one"-side series
-    on the ``on``/``ignoring`` key.
-
-    Two "one"-side shapes are accepted:
-
-    * a series vector (the Prometheus info-metric pattern) — optionally
-      with ``group_left(lbl, …)`` copying one-side labels onto the
-      result. DUPLICATE one-side keys raise at execution time (a
-      ``raise_error`` guard over a dimension-sized window count) —
-      Prometheus likewise rejects many-to-many matching at runtime,
-      and silently multiplied series would mislead dashboards;
-    * an aggregation ``by`` EXACTLY the ``on`` labels (``m / on (k)
-      group_left sum by (k) (n)``) — unique per group by construction.
-
-    Output rows carry the MANY side's full label set (canonical
-    string, metric name dropped, copied labels merged in) — Prometheus'
-    many-to-one output shape. Plan: both operands are series-sized
-    instant vectors, so the equality join is dimension-sized and AQE
-    broadcasts the smaller ("one") side; nothing here touches the
-    sample-grain frame."""
-    many_eq = bq.left if bq.group_mode == "left" else bq.right
-    one_eq = bq.right if bq.group_mode == "left" else bq.left
-    one_aggregated = _validate_group_shapes(bq)
-    many = evaluate_extended(sensors, values, many_eq, cache)
-    one = evaluate_extended(sensors, values, one_eq, cache)
-    return _group_join(many, one, bq, apply, one_aggregated)
 
 
 def _validate_group_shapes(bq: BinaryQuery) -> bool:
@@ -3906,14 +3604,33 @@ def _group_join(
     many: DataFrame,
     one: DataFrame,
     bq: BinaryQuery,
-    apply,
     one_aggregated: bool,
-    with_t: bool = False,
+    step: list[str],
 ) -> DataFrame:
-    """The many-to-one join body shared by the instant and range group
-    paths: ``with_t`` joins on (key, t) — the per-step form — and the
-    duplicate-one-side guard then partitions per (key, t)."""
-    jk = ["__k"] + (["t"] if with_t else [])
+    """Many-to-one vector matching (``group_left``/``group_right``) —
+    the real-dashboard join the one-to-one path can't express: each
+    "many"-side series joins its match group's single "one"-side series
+    on the ``on``/``ignoring`` key (and the step key ``step``: per step
+    on a range evaluation).
+
+    Two "one"-side shapes are accepted (:func:`_validate_group_shapes`):
+
+    * a series vector (the Prometheus info-metric pattern) — optionally
+      with ``group_left(lbl, …)`` copying one-side labels onto the
+      result. DUPLICATE one-side keys raise at execution time (a
+      ``raise_error`` guard over a dimension-sized window count,
+      partitioned per (key, step)) — Prometheus likewise rejects
+      many-to-many matching at runtime, and silently multiplied series
+      would mislead dashboards;
+    * an aggregation ``by`` EXACTLY the ``on`` labels (``m / on (k)
+      group_left sum by (k) (n)``) — unique per group by construction.
+
+    Output rows carry the MANY side's full label set (canonical
+    string, metric name dropped, copied labels merged in) — Prometheus'
+    many-to-one output shape. Both operands are series-sized, so the
+    equality join is dimension-sized and AQE broadcasts the smaller
+    ("one") side; nothing here touches the sample-grain frame."""
+    jk = ["__k", *step]
     key = _matching_key(bq.on, bq.ignoring)
     mk = many.withColumn("__k", key)
     if one_aggregated:
@@ -3931,13 +3648,11 @@ def _group_join(
         ]
         ok = one.select(
             F.concat_ws(",", *parts).alias("__k"),
-            *(["t"] if with_t else []),
+            *step,
             F.col("value").alias("__ov"),
         )
     else:
-        sel = [key.alias("__k")] + (
-            [F.col("t")] if with_t else []
-        ) + [F.col("value").alias("__ov")]
+        sel = [key.alias("__k"), *step, F.col("value").alias("__ov")]
         if bq.group_labels:
             sel.append(F.col("labels").alias("__ol"))
         ok = one.select(*sel)
@@ -3990,11 +3705,10 @@ def _group_join(
         )
     else:
         merged = F.col("labels")
-    out_cols = [_labels_without([], merged).alias("labels")] + (
-        [F.col("t")] if with_t else []
-    )
+    out_cols = [_labels_without([], merged).alias("labels"), *step]
     lv = F.col("value") if bq.group_mode == "left" else F.col("__ov")
     rv = F.col("__ov") if bq.group_mode == "left" else F.col("value")
+    apply = _BINARY_OPS[bq.op]
     if bq.op in _CMP_OPS:
         cond = apply(lv, rv)
         if bq.bool_mode:

@@ -30,7 +30,7 @@ covers them (fan-out R/g per bucket — the bucket-level analogue of
 evaluate_range's sample explode, over ~samples/bucket fewer rows),
 union the boundary-edge rows, then ONE groupBy (sensor, step) with
 map-side partials. The tail (label joins, aggregations, post-ops)
-reuses promql_ext._finish_range verbatim, so everything above the
+reuses promql_ext._finish verbatim, so everything above the
 per-series window reduction behaves identically by construction.
 
 The plan is built from SQL text: each branch is one ``filter`` plus one
@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 
 from sensapp_spark.datamodel.types import SensorType
 from sensapp_spark.operators.selection import select_sensors
+from sensapp_spark.query.promql_ext import _epoch_us, _finish, _StepGrid
 from sensapp_spark.storage.rollup import RollupStore
 
 __all__ = [
@@ -129,12 +130,6 @@ def min_schema_for(func) -> int:
     ``func`` exactly (∞-like large for unservable funcs — callers
     check membership in ROLLUP_SERVE_FUNCS first)."""
     return SERVE_MIN_SCHEMA.get(func, 10**9)
-
-
-def _epoch_us(t: dt.datetime) -> int:
-    if t.tzinfo is None:
-        t = t.replace(tzinfo=dt.timezone.utc)
-    return int(t.timestamp() * 1_000_000)
 
 
 def _offset_us(eq, now: dt.datetime | None) -> int:
@@ -312,14 +307,12 @@ def range_windows(
     """
     g_us = store.grain_s * 1_000_000
     r_us = int(window_seconds * 1_000_000)
-    s_us = int(step_seconds * 1_000_000)
-    start_us = _epoch_us(start)
+    start_us, s_us, n_steps = _StepGrid.of(start, end, step_seconds)
     if r_us % g_us or s_us % g_us or (start_us - offset_us) % g_us:
         raise ValueError(
             "rollup-served windows need W, step, start-offset to be "
             f"multiples of the {store.grain_s}s grain"
         )
-    n_steps = (_epoch_us(end) - start_us) // s_us
     epoch = dt.datetime(1970, 1, 1)
     scan_lo = epoch + dt.timedelta(
         microseconds=start_us - offset_us - r_us
@@ -516,7 +509,7 @@ def evaluate_range_rollup(
     extra: tuple = (),
 ) -> DataFrame:
     """promql_ext.evaluate_range, served from the rollup: same output
-    frame, same tail (_finish_range — label ops, aggregations,
+    frame, same tail (_finish — label ops, aggregations,
     topk/bottomk, post functions apply identically), but the scan reads
     rollup buckets instead of raw samples. Caller must have checked
     :func:`rollup_serveable` (per store for grain, per type for
@@ -524,8 +517,6 @@ def evaluate_range_rollup(
     multi-numeric-type fleets — their per-window values union with the
     primary's BEFORE the tail (the Integer/Numeric→f64 semantics of
     exporters/prometheus_read.py:36-68, served)."""
-    from sensapp_spark.query.promql_ext import _finish_range
-
     off_us = _offset_us(eq, now)
     selected = select_sensors(sensors, eq.selector.matchers)
     win = _served_window_values(
@@ -536,7 +527,7 @@ def evaluate_range_rollup(
         F.broadcast(selected.select("sensor_id", "name", "labels")),
         "sensor_id",
     )
-    return _finish_range(out, eq, _step_time(start, step_seconds))
+    return _finish(out, eq, _step_time(start, step_seconds))
 
 
 def rollup_serveable_instant(eq, grain_s: int) -> bool:
@@ -583,17 +574,12 @@ def evaluate_instant_rollup(
     """promql_ext.evaluate_extended, served from the rollup: the
     instant window [selector.start, selector.end] is ONE closed window
     — a degenerate step grid (start = end = selector end, one step) of
-    the range fold — and the tail reuses _finish_instant so label ops,
+    the range fold — and the tail reuses _finish so label ops,
     aggregations and post functions behave identically. Caller must
     have checked :func:`rollup_serveable_instant`. ``extra`` unions
     further (store, stype) pairs before the tail, as in
     :func:`evaluate_range_rollup`."""
     import math
-
-    from sensapp_spark.query.promql_ext import (
-        _apply_label_ops,
-        _finish_instant,
-    )
 
     q = eq.selector
     end_t = q.end_time
@@ -612,9 +598,7 @@ def evaluate_instant_rollup(
         F.broadcast(selected.select("sensor_id", "name", "labels")),
         "sensor_id",
     )
-    if eq.label_ops:
-        out = _apply_label_ops(out, eq.label_ops)
-    return _finish_instant(out, eq)
+    return _finish(out, eq)
 
 
 def maintained_grains(
@@ -728,11 +712,10 @@ def evaluate_range_quantile(
     """promql_ext.evaluate_range for ``quantile_over_time`` /
     ``mad_over_time``, served APPROXIMATELY from the bottom-k sample
     rollup (storage/qrollup.py): same output frame, same
-    _finish_range tail, per-window values estimated from the merged
+    _finish tail, per-window values estimated from the merged
     deterministic sample (exact when the window holds ≤ K samples).
     Caller must have checked :func:`quantile_rollup_serveable` AND
     the user's explicit opt-in."""
-    from sensapp_spark.query.promql_ext import _finish_range
     from sensapp_spark.storage.qrollup import quantile_windows
 
     q = eq.selector
@@ -755,4 +738,4 @@ def evaluate_range_quantile(
         F.broadcast(selected.select("sensor_id", "name", "labels")),
         "sensor_id",
     )
-    return _finish_range(joined, eq, _step_time(start, step_seconds))
+    return _finish(joined, eq, _step_time(start, step_seconds))

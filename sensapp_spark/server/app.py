@@ -661,7 +661,7 @@ def create_app(
                 # exactness argument as query_range's served path;
                 # ?rollup=0 opts out for A/B. The served evaluation
                 # sits in the same try/except PromQLError → 400 as the
-                # raw branch: the shared tail (_finish_instant) raises
+                # raw branch: the shared tail (_finish) raises
                 # the same validation errors on both paths, and a
                 # served 500 where raw answers 400 would make the
                 # auto-routing observable as a bug (round-12 advisor).

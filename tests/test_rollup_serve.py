@@ -167,7 +167,7 @@ def test_served_with_offset_and_matchers(served_lake):
 
 
 def test_served_with_aggregations_and_post_ops(served_lake):
-    """Everything above the window reduction reuses _finish_range —
+    """Everything above the window reduction reuses _finish —
     pin a representative stack of each layer anyway."""
     lake, sensors, store = served_lake
     for expr in [
